@@ -233,9 +233,9 @@ def main() -> None:
         # downstream consumers to recompute it (measured: pipeline_llm_corpus
         # 2.5s -> 9.9s), which misattributes the shared build cost.
 
-    # Tail section: same repeat policy, but each rep starts from a cold
-    # memo cache (clear_signature_cache evicts the persisted MinHash
-    # signatures AND the k-core peeled edge list) and is billed
+    # Tail section: same repeat policy, but each rep starts fully cold
+    # (clear_signature_cache drops the memo cache, the catalog cache and
+    # every persisted or locally checkpointed RDD) and is billed
     # build+exec — for these queries the work IS the build.
     from hadoop_digit_recognition_spark.operators.dedup import clear_signature_cache
 
@@ -254,7 +254,7 @@ def main() -> None:
             ts.append(time.perf_counter() - t0)
         tail[name] = round(min(ts), 3)
 
-    # Versioned second headline: tail protocol (cold memo cache,
+    # Versioned second headline: tail protocol (fully cold reps,
     # build+exec, min-of-repeat), summed + calib-normalized like the
     # primary headline so rounds 7-11 operators get a comparable,
     # regression-sensitive metric of their own.

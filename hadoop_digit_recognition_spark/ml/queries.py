@@ -21,25 +21,6 @@ from .pipeline import (
     with_features,
 )
 
-# session -> {sf_dir: persisted NB train token stream}. Same weak-keyed
-# memo as dedup._SIG_CACHE: a long-lived driver that calls
-# ml_naive_bayes_langid repeatedly reuses one persisted table instead of
-# stacking a fresh cache entry per invocation.
-import weakref
-
-_NB_TOK_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
-    weakref.WeakKeyDictionary())
-
-
-def _nb_train_tokens(spark: SparkSession, sf_dir: str,
-                     tok: DataFrame) -> DataFrame:
-    per = _NB_TOK_CACHE.get(spark)
-    if per is not None and sf_dir in per:
-        return per[sf_dir]
-    tr = tok.filter(F.col("doc_id") % 5 != 0).persist()
-    _NB_TOK_CACHE.setdefault(spark, {})[sf_dir] = tr
-    return tr
-
 
 @query("ml_centroid_classifier", oracle="""
 WITH train AS (SELECT * FROM embeddings WHERE vec_id % 5 <> 0),
@@ -397,7 +378,9 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minhash_sig_arrays: repeated invocations in a long-lived driver
     # reuse ONE persisted table instead of leaking a new cache entry per
     # call (round-4 advisor finding).
-    tr = _nb_train_tokens(spark, sf_dir, tok)
+    from ..operators.dedup import memo_persist
+    tr = memo_persist(spark, f"nb_train_tok::{sf_dir}",
+                      lambda: tok.filter(F.col("doc_id") % 5 != 0))
     te = tok.filter(F.col("doc_id") % 5 == 0)
 
     langs = (tr.groupBy("lang")

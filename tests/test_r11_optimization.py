@@ -5,14 +5,16 @@ persisted state behind, so cold repetitions stay cold."""
 
 from __future__ import annotations
 
+import pytest
+
 from tests.conftest import SF_SMOKE
 
 
-def test_memo_persist_registers_and_evicts(spark):
-    from hadoop_digit_recognition_spark.operators.dedup import (
-        _SIG_CACHE, clear_signature_cache, memo_persist)
+def _memo_range(spark, _sf_dir):
+    """A synthetic memo_persist entry: the second lookup is a hit on the
+    same persisted frame."""
+    from hadoop_digit_recognition_spark.operators.dedup import memo_persist
 
-    clear_signature_cache(spark)
     built = []
 
     def build():
@@ -20,17 +22,105 @@ def test_memo_persist_registers_and_evicts(spark):
         return spark.range(10)
 
     a = memo_persist(spark, "r11test::range", build)
-    b = memo_persist(spark, "r11test::range", build)
+    assert memo_persist(spark, "r11test::range", build) is a
     assert built == [1], "second lookup must be a cache hit"
-    assert a is b
     assert a.storageLevel.useMemory, "memo frames must be persisted"
-    n = clear_signature_cache(spark)
-    assert n >= 1
-    assert "r11test::range" not in (_SIG_CACHE.get(spark) or {})
-    # a fresh call rebuilds (cold again)
-    memo_persist(spark, "r11test::range", build)
-    assert built == [1, 1]
+    return a
+
+
+@pytest.mark.parametrize("name", [
+    "memo_persist",
+    "ml_naive_bayes_langid",             # memoized train token stream
+    "graph_kcore_dup_clusters",          # localCheckpoint-backed entry
+    "text_wordpiece_train",              # bare per-round checkpoints
+    "dedup_semdedup_multiprobe_capped",  # one entry holding three frames
+])
+def test_clear_leaves_nothing_persisted(spark, name):
+    """clear_signature_cache releases everything the query persisted,
+    memoized or not, so the next call starts cold."""
+    from hadoop_digit_recognition_spark.all_queries import SPARK_QUERIES
+    from hadoop_digit_recognition_spark.operators.dedup import (
+        _SIG_CACHE, clear_signature_cache)
+
     clear_signature_cache(spark)
+    build = _memo_range if name == "memo_persist" else SPARK_QUERIES[name]
+    build(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    assert not rdds().isEmpty(), f"{name} persists nothing: vacuous case"
+    entries = len(_SIG_CACHE.get(spark) or {})
+    assert clear_signature_cache(spark) == entries
+    assert rdds().isEmpty()
+    assert not _SIG_CACHE.get(spark)
+
+
+def test_clear_during_inflight_build_leaks_nothing(spark):
+    """A clear that lands while a memo build is in flight must not orphan
+    the build's frame: it finishes into the fresh dict, where the next
+    clear releases it together with the session's build locks."""
+    import threading
+
+    from hadoop_digit_recognition_spark.operators.dedup import (
+        _MEMO_LOCKS, _SIG_CACHE, clear_signature_cache, memo_register)
+
+    clear_signature_cache(spark)
+    started, go = threading.Event(), threading.Event()
+
+    def make():
+        started.set()
+        assert go.wait(timeout=60)
+        df = spark.range(10).persist()
+        df.count()
+        return df
+
+    t = threading.Thread(target=memo_register,
+                         args=(spark, "r11test::inflight", make))
+    t.start()
+    assert started.wait(timeout=60)
+    clear_signature_cache(spark)
+    go.set()
+    t.join(timeout=120)
+    assert not t.is_alive()
+    assert "r11test::inflight" in (_SIG_CACHE.get(spark) or {})
+    clear_signature_cache(spark)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert spark not in _MEMO_LOCKS
+
+
+def test_memo_register_single_flight_under_contention(spark):
+    """More threads than cores racing on a few keys: each key is built
+    exactly once and every thread gets the same entry."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from hadoop_digit_recognition_spark.operators.dedup import (
+        clear_signature_cache, memo_register)
+
+    clear_signature_cache(spark)
+    builds = {k: 0 for k in range(4)}
+    count_lock = threading.Lock()
+
+    def make(k):
+        with count_lock:
+            builds[k] += 1
+        return object()
+
+    def get(i):
+        k = i % 4
+        return k, memo_register(spark, f"r11test::race{k}", lambda: make(k))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            got = [f.result(timeout=60)
+                   for f in [pool.submit(get, i) for i in range(400)]]
+    finally:
+        sys.setswitchinterval(old)
+        clear_signature_cache(spark)
+    assert builds == {k: 1 for k in range(4)}
+    for k in range(4):
+        assert len({id(e) for kk, e in got if kk == k}) == 1
 
 
 def test_knn_graph_cached_matches_builder(spark):

@@ -93,3 +93,23 @@ def test_cd1_full_gradient_matches_numpy(spark):
     want = np.concatenate([gw.ravel(), ghb, gvb])
     for idx in range(nd * nh + nh + nd):
         assert abs(got[idx] - round(want[idx], 9)) < 1e-9, idx
+
+
+def test_dbn_fit_leaves_nothing_persisted(spark):
+    """A two-RBM DBN.fit releases every frame it persists: each layer's
+    trainer unpersists its narrowed copy, and nothing between layers is
+    cached on top of it."""
+    from hadoop_digit_recognition_spark.rbm.trainer import DBN
+
+    rng = np.random.default_rng(0)
+    df = spark.createDataFrame(
+        [(i, rng.random(6).tolist()) for i in range(20)],
+        "example_id bigint, v array<double>")
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    dbn = DBN([6, 4, 3], sampled=True, id_col="example_id").fit(df, "v")
+    assert [W.shape for W in dbn.weights] == [(6, 4), (4, 3)]
+    assert persisted() == before
