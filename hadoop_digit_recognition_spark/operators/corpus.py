@@ -153,8 +153,8 @@ FROM labels GROUP BY canonical_id
 def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embedding-side corpus pipeline as ONE plan: hyperplane-LSH
     buckets -> same-bucket cosine-verified near-dup pairs
-    (dedup_embedding_lsh) -> connected components (iterative min-label,
-    same loop as dedup_connected_components) -> per-cluster membership
+    (dedup_embedding_lsh) -> connected components (min_label_cc's
+    pointer-doubling min-label loop) -> per-cluster membership
     stats. The oracle rebuilds the identical chain with a recursive-CTE
     closure, so stage composition — bucketing determinism, threshold
     placement, label fixpoint — is verified end-to-end, not just each
@@ -164,9 +164,7 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     label-propagation joins); cluster count and per-cluster state are
     near-dup-sized, orders below corpus size. This is the vector-space
     sibling of pipeline_llm_corpus's text chain."""
-    from .dedup import dedup_embedding_lsh
-
-    from ..session import pinned_shuffle
+    from .dedup import dedup_embedding_lsh, min_label_cc
 
     pairs = (dedup_embedding_lsh(spark, sf_dir)
              .select("vec_a", "vec_b").localCheckpoint())
@@ -174,25 +172,8 @@ def pipeline_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
              .unionByName(pairs.select(F.col("vec_b").alias("u"),
                                        F.col("vec_a").alias("v")))
              .distinct().persist())
-    with pinned_shuffle(spark):
-        labels = (edges.groupBy("u").agg(F.min("v").alias("mv"))
-                  .select("u", F.least("u", "mv").alias("lbl")).persist())
-        prev_sum = labels.agg(F.sum("lbl")).first()[0]
-        for _ in range(20):
-            neigh = (edges.join(labels.withColumnRenamed("u", "v")
-                                .withColumnRenamed("lbl", "nlbl"), "v")
-                     .groupBy("u").agg(F.min("nlbl").alias("minn")))
-            new_labels = (labels.join(neigh, "u", "left")
-                          .select("u",
-                                  F.least("lbl", F.coalesce("minn", "lbl"))
-                                  .alias("lbl")).persist())
-            cur_sum = new_labels.agg(F.sum("lbl")).first()[0]
-            labels.unpersist()
-            labels = new_labels
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-    edges.unpersist()
+    labels, _ = min_label_cc(spark, edges)
+    edges.unpersist()  # labels is materialized (the convergence count ran)
     return (labels.groupBy(F.col("lbl").alias("canonical_id"))
             .agg(F.count(F.lit(1)).alias("n_members"),
                  F.max("u").cast("bigint").alias("max_member")))

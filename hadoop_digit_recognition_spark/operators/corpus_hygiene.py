@@ -1320,8 +1320,7 @@ def _release_chain(spark: SparkSession, sf_dir: str,
     # SemDeDup stores, the semantic-decontam index, the difficulty
     # frame — in overlapped driver threads so their internal
     # argmax/count jobs back-fill each other's stragglers (guide §2.6).
-    # Each builder is deterministic and owns disjoint memo keys;
-    # pinned_shuffle sections serialize on the session pin lock.
+    # Each builder is deterministic and owns disjoint memo keys.
     from concurrent.futures import ThreadPoolExecutor
 
     from ..ml.queries import ml_quality_classifier_distill

@@ -630,71 +630,67 @@ def min_label_cc(spark: SparkSession, edges: DataFrame,
     rounds is the number of loop iterations actually run (the last one
     is the no-change certificate). The caller owns edges' persistence;
     the returned labels DataFrame is materialized (localCheckpoint)."""
-    from ..session import pinned_shuffle
-
     # seed with round 1 folded in: lbl0(u) = min(u, min neighbor) — one
     # groupBy instead of a distinct + a full propagation round
-    with pinned_shuffle(spark):
-        # tiny-state rounds: pin shuffle width for the loop's own actions
-        # (200 default tasks/round on an untuned session, for KBs of labels)
-        #
-        # localCheckpoint, not persist: each round references the previous
-        # labels FOUR times (twice building prop, twice in the shortcut
-        # self-join), so an un-truncated logical plan grows 4^rounds —
-        # fine for 3-round near-cliques, fatal for the ~10-round path
-        # graphs doubling exists for (Catalyst re-analyzes the whole
-        # tree; the 512-node path test OOM'd generating the plan string).
-        # Checkpointing pins each round to a flat LogicalRDD; dropped
-        # references are unpersisted by Spark's ContextCleaner.
-        # eager=False: the convergence agg right below materializes the
-        # checkpoint inside its own job — one driver action per round
-        # instead of two (checkpoint job + sum job)
-        labels = (edges.groupBy("u").agg(F.min("v").alias("mv"))
-                  .select("u", F.least("u", "mv").alias("lbl"))
-                  .localCheckpoint(eager=False))
-        prev_sum = labels.agg(F.sum("lbl")).first()[0]
-        rounds = 0
-        for _ in range(max_rounds):  # doubling covers diameter ~2^max
-            rounds += 1
-            neigh = (edges.join(labels.withColumnRenamed("u", "v")
-                                .withColumnRenamed("lbl", "nlbl"), "v")
-                     .groupBy("u").agg(F.min("nlbl").alias("minn")))
-            # persisted: the shortcut join consumes prop on BOTH sides;
-            # without the cache the |E| propagation join would run twice
-            # per round. The checkpoint below is NON-eager, so prop must
-            # stay persisted until the round's convergence agg (the only
-            # action, which materializes the checkpoint) has run; it is
-            # unpersisted right after that agg.
-            prop = (labels.join(neigh, "u", "left")
-                    .select("u",
-                            F.least("lbl", F.coalesce("minn", "lbl"))
-                            .alias("lbl")).persist())
-            # pointer-doubling shortcut: lbl <- min(lbl, lbl(lbl)).
-            # Every lbl value is itself a node id with a labels row
-            # (symmetric edges put every node in the u column), so a
-            # left join can only miss when lbl(u) = u already. Both
-            # steps only ever install a smaller id from the same
-            # component, so the fixpoint — every node holding its
-            # component's min — is exactly the pure-propagation one.
-            new_labels = (prop.join(prop.select(
-                              F.col("u").alias("lbl"),
-                              F.col("lbl").alias("lbl2")),
-                              "lbl", "left")
-                          .select("u",
-                                  F.least("lbl", F.coalesce("lbl2", "lbl"))
-                                  .alias("lbl"))
-                          .localCheckpoint(eager=False))
-            # labels only decrease, so fixpoint <=> sum unchanged: one
-            # narrow agg per round instead of a labels join + count —
-            # and with the non-eager checkpoint it is the round's ONLY
-            # action (it materializes the checkpoint as it runs). prop
-            # must stay persisted until this job has run.
-            cur_sum = new_labels.agg(F.sum("lbl")).first()[0]
-            prop.unpersist()
-            labels = new_labels
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
+    #
+    # tiny-state rounds run at the caller's shuffle width; AQE coalesces
+    # each round's shuffles down to the KBs of labels they carry
+    #
+    # localCheckpoint, not persist: each round references the previous
+    # labels FOUR times (twice building prop, twice in the shortcut
+    # self-join), so an un-truncated logical plan grows 4^rounds —
+    # fine for 3-round near-cliques, fatal for the ~10-round path
+    # graphs doubling exists for (Catalyst re-analyzes the whole
+    # tree; the 512-node path test OOM'd generating the plan string).
+    # Checkpointing pins each round to a flat LogicalRDD; dropped
+    # references are unpersisted by Spark's ContextCleaner.
+    # eager=False: the convergence agg right below materializes the
+    # checkpoint inside its own job — one driver action per round
+    # instead of two (checkpoint job + sum job)
+    labels = (edges.groupBy("u").agg(F.min("v").alias("mv"))
+              .select("u", F.least("u", "mv").alias("lbl"))
+              .localCheckpoint(eager=False))
+    prev_sum = labels.agg(F.sum("lbl")).first()[0]
+    rounds = 0
+    for _ in range(max_rounds):  # doubling covers diameter ~2^max
+        rounds += 1
+        neigh = (edges.join(labels.withColumnRenamed("u", "v")
+                            .withColumnRenamed("lbl", "nlbl"), "v")
+                 .groupBy("u").agg(F.min("nlbl").alias("minn")))
+        # checkpointed: the shortcut join consumes prop on BOTH sides;
+        # without it the |E| propagation join would run twice per
+        # round. A checkpoint rather than persist(): AQE coalesces its
+        # partitions on every session, while a persisted frame keeps
+        # the static shuffle width (200 per round on a default session)
+        # wherever AQE may not change cached plans' partitioning.
+        prop = (labels.join(neigh, "u", "left")
+                .select("u",
+                        F.least("lbl", F.coalesce("minn", "lbl"))
+                        .alias("lbl")).localCheckpoint(eager=False))
+        # pointer-doubling shortcut: lbl <- min(lbl, lbl(lbl)).
+        # Every lbl value is itself a node id with a labels row
+        # (symmetric edges put every node in the u column), so a
+        # left join can only miss when lbl(u) = u already. Both
+        # steps only ever install a smaller id from the same
+        # component, so the fixpoint — every node holding its
+        # component's min — is exactly the pure-propagation one.
+        new_labels = (prop.join(prop.select(
+                          F.col("u").alias("lbl"),
+                          F.col("lbl").alias("lbl2")),
+                          "lbl", "left")
+                      .select("u",
+                              F.least("lbl", F.coalesce("lbl2", "lbl"))
+                              .alias("lbl"))
+                      .localCheckpoint(eager=False))
+        # labels only decrease, so fixpoint <=> sum unchanged: one
+        # narrow agg per round instead of a labels join + count —
+        # and with the non-eager checkpoint it is the round's ONLY
+        # action (it materializes the checkpoint as it runs)
+        cur_sum = new_labels.agg(F.sum("lbl")).first()[0]
+        labels = new_labels
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
     return labels, rounds
 
 
@@ -1438,42 +1434,39 @@ def dedup_cc_two_phase_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (e_sym.unionByName(e_sym.select("u", F.col("u").alias("v")))
                 .groupBy("u").agg(F.min("v").alias("m")))
 
-    from ..session import pinned_shuffle
-
     edges = canon(pairs.select(F.col("a").alias("u"), F.col("b").alias("v")))
-    with pinned_shuffle(spark):
-        edges = edges.localCheckpoint()
-        prev = None
-        for _ in range(25):  # O(log n) expected; hard bound for safety
-            es = sym(edges)
-            m = min_closed(es)
-            # large-star: (v, m(u)) for v in N(u), v > u
-            large = canon(es.filter(F.col("v") > F.col("u")).join(m, "u")
-                          .select(F.col("v").alias("u"),
-                                  F.col("m").alias("v")))
-            ls = sym(large)
-            m2 = min_closed(ls)
-            # small-star: (v, m(u)) for v in N(u), v <= u — with self edge
-            small = canon(ls.filter(F.col("v") < F.col("u")).join(m2, "u")
-                          .select(F.col("v").alias("u"),
-                                  F.col("m").alias("v"))
-                          .unionByName(m2.select("u", F.col("m").alias("v"))))
-            # each round references the previous round's plan several
-            # times (sym/min_closed/large/small), so lineage grows
-            # EXPONENTIALLY — localCheckpoint materializes the tiny edge
-            # list and truncates the plan (without it, round ~8's plan
-            # tree OOMs the driver during explain, long before any
-            # executor works hard)
-            # eager=False: the signature agg materializes the checkpoint
-            # in the same job — one action per star round instead of two
-            small = small.localCheckpoint(eager=False)
-            sig = small.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("u") * 1_000_003 + F.col("v")).alias("s")).first()
-            edges = small
-            if prev == (sig["n"], sig["s"]):
-                break
-            prev = (sig["n"], sig["s"])
+    edges = edges.localCheckpoint()
+    prev = None
+    for _ in range(25):  # O(log n) expected; hard bound for safety
+        es = sym(edges)
+        m = min_closed(es)
+        # large-star: (v, m(u)) for v in N(u), v > u
+        large = canon(es.filter(F.col("v") > F.col("u")).join(m, "u")
+                      .select(F.col("v").alias("u"),
+                              F.col("m").alias("v")))
+        ls = sym(large)
+        m2 = min_closed(ls)
+        # small-star: (v, m(u)) for v in N(u), v <= u — with self edge
+        small = canon(ls.filter(F.col("v") < F.col("u")).join(m2, "u")
+                      .select(F.col("v").alias("u"),
+                              F.col("m").alias("v"))
+                      .unionByName(m2.select("u", F.col("m").alias("v"))))
+        # each round references the previous round's plan several
+        # times (sym/min_closed/large/small), so lineage grows
+        # EXPONENTIALLY — localCheckpoint materializes the tiny edge
+        # list and truncates the plan (without it, round ~8's plan
+        # tree OOMs the driver during explain, long before any
+        # executor works hard)
+        # eager=False: the signature agg materializes the checkpoint
+        # in the same job — one action per star round instead of two
+        small = small.localCheckpoint(eager=False)
+        sig = small.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("u") * 1_000_003 + F.col("v")).alias("s")).first()
+        edges = small
+        if prev == (sig["n"], sig["s"]):
+            break
+        prev = (sig["n"], sig["s"])
     # fixpoint: every edge is (member, component-min); min maps to itself
     members = edges.select(F.col("u").alias("doc_id"),
                            F.col("v").alias("canonical_id"))
@@ -3079,8 +3072,6 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full LSH plan — localCheckpoint between rounds keeps the lineage
     # flat (the min_label_cc discipline; without it round 3's plan
     # string OOMs the driver)
-    from ..session import pinned_shuffle
-
     # eager=False checkpoints: lineage still truncates per round, but
     # the rounds' result stages materialize inside downstream actions
     # instead of one driver-blocking job each (the unroll is FIXED, so
@@ -3088,25 +3079,24 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (dedup_minhash_lsh(spark, sf_dir)
              .select("doc_a", "doc_b").localCheckpoint(eager=False))
     out = None
-    with pinned_shuffle(spark):
-        # edge volumes are dup-pair-sized KBs: pin the loop's shuffle
-        # width (200 default tasks/round on an untuned session)
-        for _ in range(_KTRUSS_ROUNDS):
-            und = (edges.select(F.col("doc_a").alias("node"),
-                                F.col("doc_b").alias("nbr"))
-                   .unionAll(edges.select(F.col("doc_b").alias("node"),
-                                          F.col("doc_a").alias("nbr"))))
-            sup = (edges
-                   .join(und.select(F.col("node").alias("doc_a"),
-                                    F.col("nbr").alias("wa")), "doc_a")
-                   .join(und.select(F.col("node").alias("doc_b"),
-                                    F.col("nbr").alias("wb")), "doc_b")
-                   .filter(F.col("wa") == F.col("wb"))
-                   .groupBy("doc_a", "doc_b")
-                   .agg(F.count(F.lit(1)).cast("bigint").alias("support")))
-            out = (sup.filter(F.col("support") >= _KTRUSS_K - 2)
-                   .localCheckpoint(eager=False))
-            edges = out.select("doc_a", "doc_b")
+    # edge volumes are dup-pair-sized KBs: AQE coalesces each round's
+    # shuffles down from the caller's session width
+    for _ in range(_KTRUSS_ROUNDS):
+        und = (edges.select(F.col("doc_a").alias("node"),
+                            F.col("doc_b").alias("nbr"))
+               .unionAll(edges.select(F.col("doc_b").alias("node"),
+                                      F.col("doc_a").alias("nbr"))))
+        sup = (edges
+               .join(und.select(F.col("node").alias("doc_a"),
+                                F.col("nbr").alias("wa")), "doc_a")
+               .join(und.select(F.col("node").alias("doc_b"),
+                                F.col("nbr").alias("wb")), "doc_b")
+               .filter(F.col("wa") == F.col("wb"))
+               .groupBy("doc_a", "doc_b")
+               .agg(F.count(F.lit(1)).cast("bigint").alias("support")))
+        out = (sup.filter(F.col("support") >= _KTRUSS_K - 2)
+               .localCheckpoint(eager=False))
+        edges = out.select("doc_a", "doc_b")
     return out
 
 

@@ -465,37 +465,33 @@ def _kcore_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     once on v. Peel rounds needed for full coreness is O(max core), but
     hygiene pipelines cap at k<=3 — the 2-round form IS the production
     query."""
-    from ..session import pinned_shuffle
     from .dedup import dedup_minhash_lsh, memo_register
 
     # The unrolled peel references each round's edge list twice (degree
-    # + semi-join), so left lazy the LSH band join re-executes
-    # ~2^rounds times and every tiny join schedules one task per
-    # default shuffle partition (200 on an untuned driver session).
-    # Same cure as the CC loop: peel EAGERLY under pinned_shuffle,
-    # persisting each round; the peeled core edge list is memoized in
-    # the signatures' weak-keyed session cache (clear_signature_cache
-    # evicts it), since the peel is deterministic per (session, sf).
+    # + semi-join), so left lazy the LSH band join would re-execute
+    # ~2^rounds times. Same cure as the CC loop: checkpoint each round;
+    # AQE coalesces the tiny joins' shuffles down from the session
+    # width. The peeled core edge list is memoized in the signatures'
+    # weak-keyed session cache (clear_signature_cache evicts it), since
+    # the peel is deterministic per (session, sf).
     def _build_core_edges():
         pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-        with pinned_shuffle(spark):
-            # non-eager checkpoints: the unroll is FIXED (no per-round
-            # decision), so no round needs its own driver-blocking
-            # count — planning (and thus the pinned width) happens at
-            # the localCheckpoint call, execution folds into the first
-            # downstream action; each round's RDD is cached, so the
-            # degree + two semi-join references share one execution.
-            e = (pairs.select(F.col("doc_a").alias("u"),
-                              F.col("doc_b").alias("v"))
-                 .unionByName(pairs.select(F.col("doc_b").alias("u"),
-                                           F.col("doc_a").alias("v")))
-                 .distinct().localCheckpoint(eager=False))
-            for _ in range(2):
-                deg = (e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
-                       .filter(F.col("d") >= KCORE_K).select("u"))
-                e = (e.join(deg, "u", "semi")
-                     .join(deg.withColumnRenamed("u", "v"), "v", "semi")
-                     .localCheckpoint(eager=False))
+        # non-eager checkpoints: the unroll is FIXED (no per-round
+        # decision), so no round needs its own driver-blocking count —
+        # execution folds into the first downstream action; each
+        # round's RDD is cached, so the degree + two semi-join
+        # references share one execution.
+        e = (pairs.select(F.col("doc_a").alias("u"),
+                          F.col("doc_b").alias("v"))
+             .unionByName(pairs.select(F.col("doc_b").alias("u"),
+                                       F.col("doc_a").alias("v")))
+             .distinct().localCheckpoint(eager=False))
+        for _ in range(2):
+            deg = (e.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
+                   .filter(F.col("d") >= KCORE_K).select("u"))
+            e = (e.join(deg, "u", "semi")
+                 .join(deg.withColumnRenamed("u", "v"), "v", "semi")
+                 .localCheckpoint(eager=False))
         return e
 
     # memo_register (not memo_persist): the entry is checkpoint-backed —

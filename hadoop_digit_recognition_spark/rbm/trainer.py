@@ -55,28 +55,26 @@ class RBMTrainer:
             W0: np.ndarray | None = None) -> np.ndarray:
         W = (init_weights_gaussian(self.numdims, self.numhid, seed=self.seed)
              if W0 is None else W0.astype(np.float64).copy())
-        from ..session import pinned_shuffle
 
         cols = [self.id_col, vec_col] if self.sampled else [vec_col]
         cached = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             # the per-epoch gradient groupBy shuffles weight-count rows
-            # (numdims*numhid keys) — pin the loop's shuffle width so an
-            # untuned session doesn't schedule 200 tasks per epoch for it
-            with pinned_shuffle(df.sparkSession, 16):
-                numcase = (self.numcase if self.numcase is not None
-                           else cached.count())
-                vel = np.zeros_like(W)
-                for epoch in range(self.max_epoch):
-                    delta = cd1_gradient_collect(
-                        cached, vec_col, W, epsilon=self.epsilon,
-                        numcase=numcase, sampled=self.sampled,
-                        id_col=self.id_col, epoch=epoch)
-                    vel = self.momentum * vel + delta
-                    W += vel
-                    if self.round3:
-                        # HALF_EVEN like DecimalFormat (np.round is banker's)
-                        W = np.round(W * 1000.0) / 1000.0
+            # (numdims*numhid keys) at the caller's session width; AQE
+            # coalesces that shuffle to a few tasks per epoch
+            numcase = (self.numcase if self.numcase is not None
+                       else cached.count())
+            vel = np.zeros_like(W)
+            for epoch in range(self.max_epoch):
+                delta = cd1_gradient_collect(
+                    cached, vec_col, W, epsilon=self.epsilon,
+                    numcase=numcase, sampled=self.sampled,
+                    id_col=self.id_col, epoch=epoch)
+                vel = self.momentum * vel + delta
+                W += vel
+                if self.round3:
+                    # HALF_EVEN like DecimalFormat (np.round is banker's)
+                    W = np.round(W * 1000.0) / 1000.0
         finally:
             cached.unpersist()
         self.W = W

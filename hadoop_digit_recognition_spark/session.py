@@ -5,9 +5,10 @@ below is nevertheless written for the 1000-executor / 100 TB design point:
 
 - AQE on (runtime re-plan: partition coalescing, skew-join splitting,
   broadcast conversion) — the single most important knob at scale.
-- shuffle.partitions sized to cores locally; at cluster scale this is
-  overridden per-job (rule of thumb: ~2-3x total executor cores, with AQE
-  coalescing down).
+- spark.sql.shuffle.partitions is the core count. AQE coalesces every
+  batch shuffle down from it, the driver loops' (CC labels, k-core,
+  k-truss, RBM epochs) included; only the streaming state stores
+  (streaming/pipeline.py) set their own width.
 - Arrow enabled: every pandas-UDF boundary is columnar, not pickled rows.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 """
@@ -19,16 +20,14 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "hdr-spark", cpus: int | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "hdr-spark",
+              cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = cpus
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -46,38 +45,3 @@ def get_spark(app_name: str = "hdr-spark", cpus: int | None = None,
         .getOrCreate()
     )
 
-
-from contextlib import contextmanager  # noqa: E402
-import threading  # noqa: E402
-
-# spark.sql.shuffle.partitions is SESSION-global: two driver threads
-# nesting pinned_shuffle concurrently (the §2.6 overlapped-builders
-# pattern) could each read the other's pin as "prev" and restore the
-# session to the pinned width permanently. One lock serializes the
-# pinned sections. NOTE the conf is still session-global while pinned:
-# a concurrent thread that plans/executes WITHOUT pinning observes the
-# pinned width (harmless for results, only a width hint); and a pinned
-# section must never block on worker threads that themselves pin — the
-# RLock is per-thread, so that nesting deadlocks. Current overlapped
-# builders (tokenizer bake-off, release-chain rungs) call pinned
-# helpers directly from pool threads and never wait on a nested pin.
-_PIN_LOCK = threading.RLock()
-
-
-@contextmanager
-def pinned_shuffle(spark, n: int = 8):
-    """Pin spark.sql.shuffle.partitions around an EAGER driver-side loop
-    (iterative label propagation, trainer epochs): each round's
-    joins/aggs over tiny state otherwise schedule one task per default
-    shuffle partition — 200 on an untuned session — per round. Restores
-    the caller's setting on exit; only the loop's own actions are
-    affected (the returned lazy DataFrame executes under the caller's
-    conf, which is the caller's business). Same sizing reasoning as the
-    streaming state stores (streaming/pipeline.py::run_to_memory)."""
-    with _PIN_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)

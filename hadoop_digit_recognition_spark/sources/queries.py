@@ -355,7 +355,6 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic end state batching cannot change."""
     import time
 
-    from ..streaming.pipeline import run_to_memory  # noqa: F401  (conf pattern)
     from .synthetic import (
         STREAM_CHUNKS, STREAM_ROWS, register_synthetic_stream_source)
 
@@ -364,8 +363,6 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = f"pyds_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(tempfile.gettempdir(), "hdr_ckpt", name)
     total = STREAM_CHUNKS * STREAM_ROWS
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = (sdf.writeStream.format("memory").queryName(name)
              .outputMode("append").option("checkpointLocation", ckpt)
@@ -378,7 +375,6 @@ def streaming_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         import shutil
         shutil.rmtree(ckpt, ignore_errors=True)
     got = spark.table(name)

@@ -237,3 +237,42 @@ def test_cc_consumers_default_to_star_family():
         f"engine code composes on the O(diameter) min-label CC at "
         f"{offenders} — compose on dedup_cc_two_phase_star (drop-in "
         f"(doc_id, canonical_id)) instead")
+
+
+def test_only_streaming_state_stores_set_shuffle_width():
+    """Structural ratchet: AQE owns every batch shuffle width. The only
+    module that may write spark.sql.shuffle.partitions is
+    streaming/pipeline.py, whose stateful queries run without AQE and
+    fix their state-store partition count when first started. Driver
+    loops and queries run at the caller's session width."""
+    import ast
+    import os
+
+    pkg = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "hadoop_digit_recognition_spark")
+    allowed = os.path.join("streaming", "pipeline.py")
+    offenders = []
+    for dirpath, _, filenames in os.walk(pkg):
+        for fn in sorted(filenames):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            rel = os.path.relpath(path, pkg)
+            if rel == allowed:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read())
+            for node in ast.walk(tree):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "set"
+                        and isinstance(node.func.value, ast.Attribute)
+                        and node.func.value.attr == "conf"
+                        and node.args
+                        and isinstance(node.args[0], ast.Constant)
+                        and node.args[0].value
+                        == "spark.sql.shuffle.partitions"):
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == [], (
+        f"batch code sets spark.sql.shuffle.partitions at {offenders} — "
+        f"leave the width to the session and AQE")

@@ -235,6 +235,10 @@ def test_chunking_covers_and_overlaps(words):
     # ranks, and pack attribution must not depend on shuffle width
     "pipeline_corpus_release",
     "pipeline_release_manifest",
+    # the remaining driver loops: k-truss peel, star CC, embedding CC
+    "graph_ktruss",
+    "dedup_cc_two_phase_star",
+    "pipeline_embedding_dedup",
 ])
 def test_result_invariant_to_shuffle_width(spark, name):
     """Engine-wide analog of the A4 invariant: results of hash-keyed and
@@ -243,7 +247,11 @@ def test_result_invariant_to_shuffle_width(spark, name):
     Memoized stages (k-core edges, NSW edges, capped-SemDeDup kept set)
     are EVICTED per width — otherwise the second width silently reuses
     the first width's materialization and the test is vacuous for the
-    cached stage."""
+    cached stage. The driver loops (CC labels, k-core and k-truss
+    peels) run at the session width too: they used to pin their own
+    width to 8 whatever the test set, which made the loop part of the
+    dedup_connected_components and graph_kcore_dup_clusters cases
+    vacuous."""
     from hadoop_digit_recognition_spark.all_queries import SPARK_QUERIES
     from hadoop_digit_recognition_spark.operators.dedup import (
         clear_signature_cache)

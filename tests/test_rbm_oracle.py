@@ -113,3 +113,27 @@ def test_dbn_fit_leaves_nothing_persisted(spark):
     dbn = DBN([6, 4, 3], sampled=True, id_col="example_id").fit(df, "v")
     assert [W.shape for W in dbn.weights] == [(6, 4), (4, 3)]
     assert persisted() == before
+
+
+@pytest.mark.parametrize("sampled", [False, True],
+                         ids=["meanfield", "sampled"])
+def test_trainer_invariant_to_shuffle_width(spark, sampled):
+    """RBMTrainer.fit runs its per-epoch gradient shuffle at the
+    session width (AQE coalesces it), so two epochs at widths 5 and 32
+    must end at the same weights, to the 1e-9 relative tolerance the
+    benchmark holds a seed's weights to across passes."""
+    from hadoop_digit_recognition_spark.rbm.trainer import RBMTrainer
+    from hadoop_digit_recognition_spark.tables import load
+
+    emb = load(spark, SF_ORACLE, "embeddings")
+
+    def fit_at(width):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        try:
+            return RBMTrainer(64, 16, max_epoch=2, sampled=sampled,
+                              id_col="vec_id").fit(emb, "embedding")
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    np.testing.assert_allclose(fit_at(5), fit_at(32), rtol=1e-9, atol=0)
