@@ -59,17 +59,16 @@ class RBMTrainer:
         cols = [self.id_col, vec_col] if self.sampled else [vec_col]
         cached = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            # the per-epoch gradient groupBy shuffles weight-count rows
-            # (numdims*numhid keys) at the caller's session width; AQE
-            # coalesces that shuffle to a few tasks per epoch
-            numcase = (self.numcase if self.numcase is not None
-                       else cached.count())
+            # one job per epoch and no shuffle: each partition yields one
+            # dense gradient block and the driver sums them. The observed
+            # row count rides along in the blocks, so there is no count job.
             vel = np.zeros_like(W)
             for epoch in range(self.max_epoch):
                 delta = cd1_gradient_collect(
                     cached, vec_col, W, epsilon=self.epsilon,
-                    numcase=numcase, sampled=self.sampled,
-                    id_col=self.id_col, epoch=epoch)
+                    numcase=self.numcase, sampled=self.sampled,
+                    id_col=self.id_col, epoch=epoch,
+                    weightcost=self.weightcost)
                 vel = self.momentum * vel + delta
                 W += vel
                 if self.round3:

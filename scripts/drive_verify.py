@@ -1,8 +1,9 @@
 """Drive __spark_entry__ exactly as the driver harness would: plain
 SparkSession (no engine-tuned configs), entry() smoke at sf0.001, every
 queries() entry vs oracle_sql() via DuckDB at sf0.01."""
-import sys, math, time
-sys.path.insert(0, "/root/repo")
+import os, sys, math, time
+# the checkout this script lives in, whatever the cwd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 import duckdb

@@ -101,6 +101,27 @@ def test_weight_decay_matches_numpy_golden(spark):
     np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-15)
 
 
+@pytest.mark.parametrize("parts", [1, 13])
+@pytest.mark.parametrize("sampled", [False, True],
+                         ids=["meanfield", "sampled"])
+def test_gradient_forms_agree(spark, sampled, parts):
+    """The production (collected blocks) and query (posexplode +
+    groupBy) forms finish from the same per-partition kernel, so they
+    must give the same delta to 1e-12 relative."""
+    from hadoop_digit_recognition_spark.rbm.cd1 import cd1_gradient_df
+
+    emb = (spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+           .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+           .repartition(parts))
+    W = init_weights_sin(64, 16)
+    kw = dict(sampled=sampled, id_col="vec_id", epoch=1)
+    got = cd1_gradient_collect(emb, "v", W, **kw)
+    rows = cd1_gradient_df(emb, "v", W, **kw).orderBy("idx").collect()
+    assert [r["idx"] for r in rows] == list(range(64 * 16))
+    want = np.array([r["dw"] for r in rows]).reshape(64, 16)
+    np.testing.assert_allclose(got, want, rtol=1e-12, atol=0)
+
+
 def test_no_row_at_a_time_udf_in_engine():
     """grep-level invariant: `F.udf(` never appears in the engine package
     (Arrow-batched pandas UDFs and built-ins only — the 100 TB hot-path
@@ -129,6 +150,22 @@ def test_trainer_matches_numpy_golden(spark):
     W = init_weights_gaussian(6, 4, seed=11)
     for _ in range(3):
         W = W + 0.1 * (numpy_cd1_meanfield(V, W) / 40)
+    np.testing.assert_allclose(W_dist, W, rtol=1e-10, atol=1e-13)
+
+
+def test_trainer_weight_decay_matches_numpy_golden(spark):
+    """RBMTrainer(weightcost=...) reaches the gradient: three epochs at
+    weightcost=0.01 equal the NumPy loop with the - weightcost*W term."""
+    rng = np.random.default_rng(5)
+    V = rng.random((40, 6))
+    df = spark.createDataFrame(pd.DataFrame({"v": [list(r) for r in V]}))
+
+    W_dist = RBMTrainer(6, 4, max_epoch=3, seed=11, weightcost=0.01).fit(df, "v")
+
+    from hadoop_digit_recognition_spark.rbm.cd1 import init_weights_gaussian
+    W = init_weights_gaussian(6, 4, seed=11)
+    for _ in range(3):
+        W = W + 0.1 * (numpy_cd1_meanfield(V, W) / 40 - 0.01 * W)
     np.testing.assert_allclose(W_dist, W, rtol=1e-10, atol=1e-13)
 
 

@@ -118,10 +118,12 @@ def test_dbn_fit_leaves_nothing_persisted(spark):
 @pytest.mark.parametrize("sampled", [False, True],
                          ids=["meanfield", "sampled"])
 def test_trainer_invariant_to_shuffle_width(spark, sampled):
-    """RBMTrainer.fit runs its per-epoch gradient shuffle at the
-    session width (AQE coalesces it), so two epochs at widths 5 and 32
-    must end at the same weights, to the 1e-9 relative tolerance the
-    benchmark holds a seed's weights to across passes."""
+    """RBMTrainer.fit no longer shuffles (each epoch collects one
+    gradient block per partition), so the session width must not reach
+    its result: two epochs at widths 5 and 32 must end at the same
+    weights, to the 1e-9 relative tolerance the benchmark holds a seed's
+    weights to across passes. Kept as a guard against a shuffle coming
+    back."""
     from hadoop_digit_recognition_spark.rbm.trainer import RBMTrainer
     from hadoop_digit_recognition_spark.tables import load
 
@@ -137,3 +139,30 @@ def test_trainer_invariant_to_shuffle_width(spark, sampled):
             spark.conf.set("spark.sql.shuffle.partitions", old)
 
     np.testing.assert_allclose(fit_at(5), fit_at(32), rtol=1e-9, atol=0)
+
+
+@pytest.mark.parametrize("sampled", [False, True],
+                         ids=["meanfield", "sampled"])
+def test_trainer_runs_one_job_per_epoch(spark, sampled):
+    """Job ratchet: a two-epoch RBMTrainer.fit runs exactly 2 jobs of
+    one stage each — the first epoch's job also fills the persisted
+    copy, the row count comes from the gradient blocks, and no epoch
+    shuffles."""
+    from hadoop_digit_recognition_spark.rbm.trainer import RBMTrainer
+    from hadoop_digit_recognition_spark.tables import load
+
+    sc = spark.sparkContext
+    emb = load(spark, SF_ORACLE, "embeddings")
+    group = f"rbm-job-ratchet-{'sampled' if sampled else 'meanfield'}"
+    sc.setJobGroup(group, group)
+    try:
+        RBMTrainer(64, 16, max_epoch=2, sampled=sampled,
+                   id_col="vec_id").fit(emb, "embedding")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert (len(jobs), len(stages)) == (2, 2)
