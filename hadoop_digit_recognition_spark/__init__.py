@@ -12,9 +12,13 @@ Layout
                    forward prop — the reference's core workload (rbmmapper.java, driver.java).
 - ``streaming``  : event-time windows (tumbling/sliding/session) + watermark demos.
 - ``plans``      : plan-inspection helpers (pushdown / broadcast / codegen assertions).
+- ``shipping``   : ships the package to Python workers and, before Python 3.12,
+                   keeps them from re-parsing unchanged zip archives every task.
 
 All heavy math rides Spark built-ins or Arrow-batched pandas UDFs; no
 row-at-a-time Python UDFs in any hot path.
 """
+
+from . import shipping  # noqa: F401  (importing it installs the zip re-read fix)
 
 __version__ = "0.1.0"

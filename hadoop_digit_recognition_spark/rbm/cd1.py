@@ -144,15 +144,27 @@ def _to_matrix(series: pd.Series, numdims: int) -> np.ndarray:
     return np.vstack(series.to_numpy()).astype(np.float64, copy=False)
 
 
+def _cd1_full_sums(V: np.ndarray, W: np.ndarray) -> np.ndarray:
+    """Mean-field CD-1 summed over V's rows, weights AND both bias vectors,
+    flat in cd1_gradient_full_df's index layout."""
+    h0p = _sigmoid(V @ W)
+    v1 = _sigmoid(h0p @ W.T)
+    h1p = _sigmoid(v1 @ W)
+    return np.concatenate([(V.T @ h0p - v1.T @ h1p).ravel(),
+                           h0p.sum(axis=0) - h1p.sum(axis=0),
+                           V.sum(axis=0) - v1.sum(axis=0)])
+
+
 def _cd1_blocks(df: DataFrame, vec_col: str, W: np.ndarray, sampled: bool,
-                id_col: str | None, epoch: int):
-    """The one CD-1 weight kernel: a mapInPandas yielding ONE row per
-    partition, (n bigint, acc array<double>): the partition's row count
-    and its row-major (i*numhid+j, not defect D3) sum of posprods -
-    negprods. Returns (blocks, broadcast W). sampled=True requires id_col:
-    the Bernoulli uniforms are content-hashed from (row id, hidden unit,
-    epoch), see det_uniforms, so the result is partition-invariant and
-    exactly reproducible in the SQL oracle."""
+                id_col: str | None, epoch: int, biases: bool = False):
+    """The one CD-1 kernel: a mapInPandas yielding ONE row per partition,
+    (n bigint, acc array<double>): the partition's row count and its
+    row-major (i*numhid+j, not defect D3) sum of posprods - negprods,
+    followed by the hidden- and visible-bias sums when biases=True
+    (mean-field only). Returns (blocks, broadcast W). sampled=True requires
+    id_col: the Bernoulli uniforms are content-hashed from (row id, hidden
+    unit, epoch), see det_uniforms, so the result is partition-invariant
+    and exactly reproducible in the SQL oracle."""
     from ..shipping import ensure_shipped
 
     if sampled and id_col is None:
@@ -162,25 +174,36 @@ def _cd1_blocks(df: DataFrame, vec_col: str, W: np.ndarray, sampled: bool,
     ensure_shipped(spark)
     nd, nh = W.shape
     b_w = spark.sparkContext.broadcast(np.ascontiguousarray(W, dtype=np.float64))
+    width = nd * nh + (nh + nd if biases else 0)
 
     def block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         Wv = b_w.value
-        acc = np.zeros((nd, nh), dtype=np.float64)
+        acc = np.zeros(width, dtype=np.float64)
         n = 0
         for pdf in batches:
             V = _to_matrix(pdf[vec_col], nd)
             n += len(V)
-            if sampled:
+            if biases:
+                acc += _cd1_full_sums(V, Wv)
+            elif sampled:
                 # uniforms precomputed JVM-side (det_uniforms_col) — arrives
                 # as an Arrow array column, no Python hashing here
-                acc += numpy_cd1_sampled(V, Wv, _to_matrix(pdf["__u"], nh))
+                acc += numpy_cd1_sampled(V, Wv, _to_matrix(pdf["__u"], nh)).ravel()
             else:
-                acc += numpy_cd1_meanfield(V, Wv)
-        yield pd.DataFrame({"n": [n], "acc": [acc.ravel()]})
+                acc += numpy_cd1_meanfield(V, Wv).ravel()
+        yield pd.DataFrame({"n": [n], "acc": [acc]})
 
     u = [det_uniforms_col(id_col, nh, epoch).alias("__u")] if sampled else []
     return (df.select(F.col(vec_col), *u)
             .mapInPandas(block, schema="n bigint, acc array<double>"), b_w)
+
+
+def _keyed_sum(blocks: DataFrame) -> DataFrame:
+    """The reference's keyed-sum reducer over _cd1_blocks rows:
+    posexplode(acc) + groupBy(idx) -> (idx bigint, gsum, __n = sum(n))."""
+    return (blocks.select("n", F.posexplode("acc").alias("idx", "g"))
+            .groupBy(F.col("idx").cast("bigint").alias("idx"))
+            .agg(F.sum("g").alias("gsum"), F.sum("n").alias("__n")))
 
 
 def cd1_gradient_df(df: DataFrame, vec_col: str, W: np.ndarray,
@@ -194,9 +217,7 @@ def cd1_gradient_df(df: DataFrame, vec_col: str, W: np.ndarray,
     reducer, posexplode(acc) + groupBy(idx).sum, fed one _cd1_blocks row
     per partition; numcase defaults to the observed count, sum(n)."""
     blocks, _ = _cd1_blocks(df, vec_col, W, sampled, id_col, epoch)
-    summed = (blocks.select("n", F.posexplode("acc").alias("idx", "g"))
-              .groupBy(F.col("idx").cast("bigint").alias("idx"))
-              .agg(F.sum("g").alias("gsum"), F.sum("n").alias("__n")))
+    summed = _keyed_sum(blocks)
     count = F.col("__n") if numcase is None else F.lit(float(numcase))
     if weightcost != 0.0:
         # Weight decay via a broadcast (idx, w) weight-frame join, which
@@ -274,43 +295,11 @@ def cd1_gradient_full_df(df: DataFrame, vec_col: str, W: np.ndarray,
       [nd*nh, nd*nh+nh)       hidden biases (j)
       [nd*nh+nh, nd*nh+nh+nd) visible biases (i)
     Bias gradients cost nothing extra: h0p/h1p/v1 are already in hand,
-    and the shuffle grows by (nd+nh) rows per partition — invisible next
-    to nd*nh."""
-    from ..shipping import ensure_shipped
-
-    spark = df.sparkSession
-    ensure_shipped(spark)
-    nd, nh = W.shape
-    if numcase is None:
-        numcase = df.count()
-    b_w = spark.sparkContext.broadcast(
-        np.ascontiguousarray(W, dtype=np.float64))
-
-    def grad(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        Wv = b_w.value
-        acc_w = np.zeros((nd, nh), dtype=np.float64)
-        acc_hb = np.zeros(nh, dtype=np.float64)
-        acc_vb = np.zeros(nd, dtype=np.float64)
-        for pdf in batches:
-            V = _to_matrix(pdf[vec_col], nd)
-            if V.shape[0] == 0:
-                continue
-            h0p = _sigmoid(V @ Wv)
-            v1 = _sigmoid(h0p @ Wv.T)
-            h1p = _sigmoid(v1 @ Wv)
-            acc_w += V.T @ h0p - v1.T @ h1p
-            acc_hb += h0p.sum(axis=0) - h1p.sum(axis=0)
-            acc_vb += V.sum(axis=0) - v1.sum(axis=0)
-        yield pd.DataFrame({
-            "idx": np.concatenate([
-                np.arange(nd * nh, dtype=np.int64),
-                nd * nh + np.arange(nh, dtype=np.int64),
-                nd * nh + nh + np.arange(nd, dtype=np.int64)]),
-            "dw": np.concatenate([acc_w.ravel(), acc_hb, acc_vb]),
-        })
-
-    partial = df.select(vec_col).mapInPandas(grad, schema="idx bigint, dw double")
-    return (partial.groupBy("idx").agg(F.sum("dw").alias("gsum"))
-            .select("idx",
-                    F.round(F.lit(float(epsilon)) * F.col("gsum")
-                            / F.lit(float(numcase)), 9).alias("dw")))
+    and each partition's _cd1_blocks row grows by nd+nh doubles. numcase
+    defaults to the observed count, sum(n), so building runs no job."""
+    blocks, _ = _cd1_blocks(df, vec_col, W, False, None, 0, biases=True)
+    summed = _keyed_sum(blocks)
+    count = F.col("__n") if numcase is None else F.lit(float(numcase))
+    return summed.select(
+        "idx",
+        F.round(F.lit(float(epsilon)) * F.col("gsum") / count, 9).alias("dw"))

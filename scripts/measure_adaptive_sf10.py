@@ -1,8 +1,9 @@
 """Measure the adaptive-plane kNN bucket build at 200k vectors (sf10
 fixture): plane count picked, bucket-width distribution, sum w^2 vs the
 n*BUCKET_TARGET linear model, and the graph-build wall."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 spark = (SparkSession.builder.master("local[32]")
@@ -13,7 +14,7 @@ spark.sparkContext.setLogLevel("ERROR")
 from hadoop_digit_recognition_spark.operators.similarity import (
     _adaptive_n_planes, _bucket_df, BUCKET_TARGET, l2norm_col)
 from hadoop_digit_recognition_spark.all_queries import SPARK_QUERIES
-D = "/root/repo/.scratch/sf10"
+D = os.path.join(REPO, ".scratch", "sf10")
 from hadoop_digit_recognition_spark.tables import load_parallel
 n = (load_parallel(spark, D, "embeddings")
      .filter(l2norm_col(F.col("embedding")) > 0).count())

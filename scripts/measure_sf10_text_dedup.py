@@ -1,6 +1,6 @@
 import glob, json, os, shutil, sys, time
-sys.path.insert(0, "/root/repo")
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 SF10 = os.path.join(REPO, ".scratch", "sf10")
 EVLOG = os.path.join(REPO, ".scratch", "eventlog_sf10ext")
 shutil.rmtree(EVLOG, ignore_errors=True)

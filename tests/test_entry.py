@@ -4,6 +4,87 @@ import importlib
 import os
 
 
+def test_unchanged_zip_is_not_reparsed(tmp_path):
+    """importlib.invalidate_caches() (which pyspark's worker calls before
+    every task) re-reads a zip archive's directory only when the archive
+    changed since its last read: an unchanged archive is not re-parsed,
+    and a rewritten one is, so a module added to it becomes importable."""
+    import sys
+    import zipfile
+    import zipimport
+
+    import hadoop_digit_recognition_spark  # noqa: F401  (installs the fix)
+
+    zpath = str(tmp_path / "zprobe.zip")
+
+    def write(*mods):
+        with zipfile.ZipFile(zpath, "w") as z:
+            z.writestr("zprobe_pkg/__init__.py", "")
+            for m in mods:
+                z.writestr(f"zprobe_pkg/{m}.py", f"NAME = {m!r}\n")
+
+    write("a")
+    sys.path.insert(0, zpath)
+    original = zipimport._read_directory
+    reads = []
+    zipimport._read_directory = lambda p: reads.append(p) or original(p)
+    try:
+        importlib.import_module("zprobe_pkg.a")
+        importlib.invalidate_caches()  # first call per archive reads it
+        reads.clear()
+        importlib.invalidate_caches()
+        importlib.invalidate_caches()
+        assert reads == []
+        write("a", "b")
+        importlib.invalidate_caches()
+        assert zpath in reads
+        assert importlib.import_module("zprobe_pkg.b").NAME == "b"
+    finally:
+        zipimport._read_directory = original
+        sys.path.remove(zpath)
+        for k in [k for k in sys.path_importer_cache if k.startswith(zpath)]:
+            del sys.path_importer_cache[k]
+        for k in [k for k in sys.modules if k.startswith("zprobe_pkg")]:
+            del sys.modules[k]
+
+
+def test_worker_does_not_reparse_unchanged_zips(spark):
+    """The same fix inside Spark's Python workers. An engine mapInPandas
+    runs twice; in the second job every task counts the zip directory
+    reads of one importlib.invalidate_caches() and must see none. The
+    call before the count lets a worker that has only just imported the
+    engine package record its archives first."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from hadoop_digit_recognition_spark.rbm.cd1 import _to_matrix
+    from hadoop_digit_recognition_spark.shipping import ensure_shipped
+
+    ensure_shipped(spark)
+    df = spark.range(0, 8, numPartitions=2).select(
+        F.array(F.col("id").cast("double")).alias("v"))
+
+    def probe(batches):
+        # _to_matrix is pickled by reference: unpickling imports the engine
+        import zipimport
+
+        n = sum(len(_to_matrix(pdf["v"], 1)) for pdf in batches)
+        importlib.invalidate_caches()
+        original = zipimport._read_directory
+        reads = []
+        zipimport._read_directory = lambda p: reads.append(p) or original(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = original
+        yield pd.DataFrame({"n": [n], "reads": [len(reads)]})
+
+    for _ in range(2):
+        rows = df.mapInPandas(probe, "n bigint, reads bigint").collect()
+    assert sum(r.n for r in rows) == 8
+    assert [r.reads for r in rows] == [0, 0]
+
+
 def test_entry_smoke(spark):
     mod = importlib.import_module("__spark_entry__")
     df = mod.entry(spark)

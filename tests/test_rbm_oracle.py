@@ -166,3 +166,30 @@ def test_trainer_runs_one_job_per_epoch(spark, sampled):
     jobs = tracker.getJobIdsForGroup(group)
     stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
     assert (len(jobs), len(stages)) == (2, 2)
+
+
+@pytest.mark.parametrize("name", ["rbm_cd1_epoch", "rbm_cd1_epoch_sampled",
+                                  "rbm_cd1_epoch_biases"])
+def test_epoch_query_builds_without_a_job(spark, name):
+    """Job ratchet: building a one-epoch gradient query runs no job of
+    its own (only the parquet read's schema job, which loading the
+    embeddings table alone also runs). Its row count comes from sum(n)
+    over the gradient blocks inside the same aggregate, not from an
+    eager count() at build time."""
+    from hadoop_digit_recognition_spark.tables import load
+
+    sc = spark.sparkContext
+
+    def jobs_of(tag, build):
+        group = f"rbm-build-ratchet-{name}-{tag}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    read = jobs_of("load", lambda: load(spark, SF_ORACLE, "embeddings"))
+    assert jobs_of("build", lambda: SPARK_QUERIES[name](spark, SF_ORACLE)) == read
