@@ -22,8 +22,10 @@ exists. Sampled mode draws each Bernoulli uniform from a content hash,
 u[row,j] = md5("{row_id}|{j}|{epoch}")[:8] % 2^24 / 2^24 (the same
 det_hash64 used by sample_deterministic / minhash), so the sampled epoch
 is ALSO exactly SQL-expressible — identical on any partitioning, any
-cluster, any engine. The reference uses a fresh unseeded Random per
-record and is irreproducible by construction
+cluster, any engine. The JVM sends only the row id, cast to string; the
+kernel hashes each Arrow batch's (rows, numhid) draws itself with a
+vectorized NumPy MD5 (_md5_uniforms). The reference uses a fresh unseeded
+Random per record and is irreproducible by construction
 (/root/reference/rbmmapper.java:169).
 """
 
@@ -89,10 +91,9 @@ def det_uniforms(ids: np.ndarray, nh: int, epoch: int = 0) -> np.ndarray:
     ANSI-SQL engine's md5, which is what makes the SAMPLED CD-1 epoch
     oracle-checkable (and partition-invariant, unlike a per-partition RNG).
 
-    GOLDEN-MODEL TWIN ONLY: this O(rows*nh) interpreted-Python loop exists
-    for pytest agreement checks against the production path, which computes
-    the identical matrix JVM-side (`det_uniforms_col`) and ships it to the
-    pandas UDF as an Arrow array column — no per-element Python work."""
+    The hashlib reference: tests and the benchmark's golden epoch check
+    the kernel's vectorized _md5_uniforms against this row loop, and the
+    kernel falls back to it for messages longer than one MD5 block."""
     import hashlib
 
     U = np.empty((len(ids), nh), dtype=np.float64)
@@ -104,20 +105,93 @@ def det_uniforms(ids: np.ndarray, nh: int, epoch: int = 0) -> np.ndarray:
     return U
 
 
-def det_uniforms_col(id_col: str, nh: int, epoch: int = 0):
-    """The det_uniforms matrix as a JVM-side Column: array<double> of length
-    nh with u[j] = (conv(substr(md5(id|'|'|j|'|'|epoch), 1, 8), 16, 10)
-    % 2^24) / 2^24 — byte-identical to det_uniforms (UTF-8 md5, first 8 hex
-    chars) but evaluated in whole-stage codegen, so the sampled CD-1 path
-    has NO per-element Python loop (the reference does rows*numhid unseeded
-    java.util.Random draws in the mapper, rbmmapper.java:166-182)."""
-    def _u(j):
-        s = F.concat_ws("|", F.col(id_col).cast("string"),
-                        j.cast("string"), F.lit(str(epoch)))
-        h = F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint")
-        return (h % F.lit(16777216)).cast("double") / F.lit(16777216.0)
+# MD5 (RFC 1321): per-round shift, sine constant and message-word index.
+_MD5_S = np.array([7, 12, 17, 22] * 4 + [5, 9, 14, 20] * 4
+                  + [4, 11, 16, 23] * 4 + [6, 10, 15, 21] * 4, dtype=np.uint32)
+_MD5_K = np.floor(np.abs(np.sin(np.arange(1, 65))) * 2.0**32).astype(np.uint32)
+_MD5_G = [i if i < 16 else (5 * i + 1) % 16 if i < 32 else
+          (3 * i + 5) % 16 if i < 48 else (7 * i) % 16 for i in range(64)]
+_MD5_LANES = 1 << 15  # (row, j) messages hashed at once: ~1 MB of scratch
 
-    return F.transform(F.sequence(F.lit(0), F.lit(nh - 1)), _u)
+
+def _md5_word_a(M: list[np.ndarray]) -> np.ndarray:
+    """Word A of the MD5 digest of single-block messages, one per lane.
+    M holds the block's 16 little-endian uint32 words, each an array that
+    broadcasts to the lane shape (a word constant along rows or columns
+    stays a row or column)."""
+    shape = np.broadcast_shapes(*(m.shape for m in M))
+    a, b, c, d = (np.full(shape, v, dtype=np.uint32) for v in
+                  (0x67452301, 0xefcdab89, 0x98badcfe, 0x10325476))
+    f = np.empty(shape, dtype=np.uint32)
+    t = np.empty(shape, dtype=np.uint32)
+    for i in range(64):
+        if i < 16:    # (b & c) | (~b & d)
+            np.bitwise_xor(c, d, out=f)
+            f &= b
+            f ^= d
+        elif i < 32:  # (d & b) | (~d & c)
+            np.bitwise_xor(b, c, out=f)
+            f &= d
+            f ^= c
+        elif i < 48:
+            np.bitwise_xor(b, c, out=f)
+            f ^= d
+        else:         # c ^ (b | ~d)
+            np.invert(d, out=f)
+            f |= b
+            f ^= c
+        f += a
+        f += _MD5_K[i]
+        f += M[_MD5_G[i]]
+        np.left_shift(f, _MD5_S[i], out=t)
+        f >>= np.uint32(32) - _MD5_S[i]
+        f |= t
+        f += b
+        a, b, c, d, f = d, f, b, c, a
+    a += np.uint32(0x67452301)
+    return a
+
+
+def _md5_uniforms(ids: list[str | None], nh: int, epoch: int = 0) -> np.ndarray:
+    """det_uniforms for string row ids, vectorized: the (len(ids), nh)
+    draws of one Arrow batch, hashed as f"{id}|{j}|{epoch}". A null id has
+    an empty "{id}|" prefix, so it hashes as f"{j}|{epoch}".
+
+    Rows are grouped by the byte length p of their "{id}|" prefix. Each
+    group ORs the rows' prefix words with one (nh, 16) template holding
+    every j's suffix at offset p, the 0x80 pad and the bit length in word
+    14, and runs MD5 over about _MD5_LANES lanes at a time (one row when
+    nh is wider). int(hexdigest[:8], 16) is word A byte-swapped. A message
+    longer than one block (55 bytes) goes through det_uniforms; at
+    nh <= 10^5 and epoch < 100 only a string id over 46 bytes does that,
+    never a bigint's at most 20 characters."""
+    U = np.empty((len(ids), nh), dtype=np.float64)
+    pre = [b"" if s is None else f"{s}|".encode() for s in ids]
+    lens = np.array([len(x) for x in pre], dtype=np.int64)
+    sufs = [f"{j}|{epoch}".encode() for j in range(nh)]
+    longest = len(f"{nh - 1}|{epoch}")
+    for p in map(int, np.unique(lens)):
+        rows = np.flatnonzero(lens == p)
+        if p + longest > 55:
+            U[rows] = det_uniforms([pre[r][:-1].decode() for r in rows], nh, epoch)
+            continue
+        T = np.frombuffer(b"".join(
+            bytes(p) + s + b"\x80" + bytes(55 - p - len(s))
+            + (8 * (p + len(s))).to_bytes(8, "little") for s in sufs),
+            dtype="<u4").reshape(nh, 16)
+        P = np.zeros((len(rows), 64), dtype=np.uint8)
+        P[:, :p] = np.frombuffer(b"".join(pre[r] for r in rows),
+                                 dtype=np.uint8).reshape(len(rows), p)
+        P = P.view("<u4")
+        step = max(1, _MD5_LANES // nh)
+        for lo in range(0, len(rows), step):
+            Pc = P[lo:lo + step]
+            M = [T[:, w] if not Pc[:, w].any() else
+                 Pc[:, w:w + 1] if not T[:, w].any() else
+                 Pc[:, w:w + 1] | T[:, w] for w in range(16)]
+            h = np.broadcast_to(_md5_word_a(M), (len(Pc), nh))
+            U[rows[lo:lo + step]] = (h.byteswap() & np.uint32(0xFFFFFF)) / 16777216.0
+    return U
 
 
 def numpy_cd1_sampled(V: np.ndarray, W: np.ndarray, U: np.ndarray,
@@ -164,7 +238,9 @@ def _cd1_blocks(df: DataFrame, vec_col: str, W: np.ndarray, sampled: bool,
     (mean-field only). Returns (blocks, broadcast W). sampled=True requires
     id_col: the Bernoulli uniforms are content-hashed from (row id, hidden
     unit, epoch), see det_uniforms, so the result is partition-invariant
-    and exactly reproducible in the SQL oracle."""
+    and exactly reproducible in the SQL oracle. Only the id crosses the
+    Arrow boundary, as a string; the kernel hashes each batch's draws
+    (_md5_uniforms)."""
     from ..shipping import ensure_shipped
 
     if sampled and id_col is None:
@@ -186,15 +262,16 @@ def _cd1_blocks(df: DataFrame, vec_col: str, W: np.ndarray, sampled: bool,
             if biases:
                 acc += _cd1_full_sums(V, Wv)
             elif sampled:
-                # uniforms precomputed JVM-side (det_uniforms_col) — arrives
-                # as an Arrow array column, no Python hashing here
-                acc += numpy_cd1_sampled(V, Wv, _to_matrix(pdf["__u"], nh)).ravel()
+                U = _md5_uniforms(pdf["__id"].tolist(), nh, epoch)
+                acc += numpy_cd1_sampled(V, Wv, U).ravel()
             else:
                 acc += numpy_cd1_meanfield(V, Wv).ravel()
         yield pd.DataFrame({"n": [n], "acc": [acc]})
 
-    u = [det_uniforms_col(id_col, nh, epoch).alias("__u")] if sampled else []
-    return (df.select(F.col(vec_col), *u)
+    # Spark's cast fixes the hashed text for every id type, as the oracle's
+    # CAST(vec_id AS VARCHAR) does
+    rid = [F.col(id_col).cast("string").alias("__id")] if sampled else []
+    return (df.select(F.col(vec_col), *rid)
             .mapInPandas(block, schema="n bigint, acc array<double>"), b_w)
 
 

@@ -212,8 +212,9 @@ FROM w1 JOIN d2 ON w1.i = d2.i AND w1.j = d2.j
 
 
 def _u_sql(epoch: int) -> str:
-    """The det_uniforms/det_uniforms_col formula at a given epoch, in ANSI
-    SQL, referencing columns (vec_id, j) of the enclosing CTE."""
+    """The det_uniforms formula (which the CD-1 kernel computes per batch
+    with a vectorized MD5) at a given epoch, in ANSI SQL, referencing
+    columns (vec_id, j) of the enclosing CTE."""
     return ("(('0x' || substr(md5(CAST(vec_id AS VARCHAR) || '|' || "
             f"CAST(j AS VARCHAR) || '|{epoch}'), 1, 8))::BIGINT "
             "% 16777216) / 16777216.0")
@@ -295,8 +296,9 @@ def rbm_cd1_two_epochs_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     two sampled CD-1 epochs through RBMTrainer.fit, with the Bernoulli
     uniforms content-hash-keyed on (row, unit, epoch) so each epoch's
     draws are distinct yet exactly reproducible in SQL (epoch flows into
-    det_uniforms_col; reference: one job per epoch with a fresh unseeded
-    Random per record, driver.java:90-219 + rbmmapper.java:169)."""
+    the text the CD-1 kernel hashes; reference: one job per epoch with a
+    fresh unseeded Random per record, driver.java:90-219 +
+    rbmmapper.java:169)."""
     emb = load(spark, sf_dir, "embeddings")
     t = RBMTrainer(NUMDIMS, NUMHID, epsilon=EPSILON, max_epoch=2,
                    sampled=True, id_col="vec_id")

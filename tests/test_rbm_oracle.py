@@ -22,19 +22,70 @@ RBM_QUERIES = ["rbm_cd1_epoch", "rbm_forward_prop", "rbm_forward_prop_quantized"
                "rbm_cd1_epoch_biases", "rbm_cd1_two_epochs_momentum"]
 
 
-def test_det_uniforms_col_matches_python_twin(spark):
-    """The JVM-side draw column (production path) must be bit-identical to
-    the interpreted-Python golden twin for several epochs and id shapes."""
-    from hadoop_digit_recognition_spark.rbm.cd1 import det_uniforms, det_uniforms_col
+def test_md5_uniforms_match_hashlib_twin():
+    """The kernel's vectorized MD5 draws (production path) are
+    bit-identical to the hashlib row loop, det_uniforms, across id
+    shapes, widths (five-digit j at 12000), epochs, zero rows and a row
+    count that is not a multiple of the lane chunk."""
+    from hadoop_digit_recognition_spark.rbm.cd1 import (
+        _MD5_LANES, _md5_uniforms, det_uniforms)
 
-    ids = np.array([0, 1, 7, 99, 12345, 2**40])
-    df = spark.createDataFrame([(int(i),) for i in ids], "vec_id bigint")
-    for epoch in (0, 1, 5):
-        rows = (df.select("vec_id", det_uniforms_col("vec_id", 9, epoch).alias("u"))
-                .orderBy("vec_id").collect())
-        got = np.array([r["u"] for r in sorted(rows, key=lambda r: r["vec_id"])])
-        want = det_uniforms(np.sort(ids), 9, epoch)
-        assert np.array_equal(got, want)
+    ids = [0, 9, 10, 99, 12345, 2**40, -1, -2**63, 2**63 - 1]
+    for nh in (1, 9, 500, 12000):
+        for epoch in (0, 1, 12):
+            got = _md5_uniforms([str(i) for i in ids], nh, epoch)
+            assert np.array_equal(got, det_uniforms(ids, nh, epoch)), (nh, epoch)
+    assert _md5_uniforms([], 500).shape == (0, 500)
+    rows = 2 * (_MD5_LANES // 500) + 1
+    got = _md5_uniforms([str(i) for i in range(rows)], 500, 3)
+    assert np.array_equal(got, det_uniforms(np.arange(rows), 500, 3))
+
+
+def test_md5_uniforms_string_and_null_ids(monkeypatch):
+    """String ids hash as their UTF-8 text. A message of exactly one MD5
+    block's 55 bytes stays on the vector path; one byte more goes
+    through det_uniforms. A null id hashes as f"{j}|{epoch}", the text
+    Spark's concat_ws hashed by dropping the null."""
+    import hashlib
+
+    from hadoop_digit_recognition_spark.rbm import cd1
+
+    nh, epoch = 500, 7
+    fits = "a" * (55 - len(f"{nh - 1}|{epoch}") - 1)  # "{id}|499|7" = 55 bytes
+    ids = ["doc-é", fits, fits + "b", None]
+    want = cd1.det_uniforms(ids[:3], nh, epoch)
+    fallback = []
+    real = cd1.det_uniforms
+    monkeypatch.setattr(cd1, "det_uniforms",
+                        lambda i, *a: fallback.append(list(i)) or real(i, *a))
+    got = cd1._md5_uniforms(ids, nh, epoch)
+    assert fallback == [[fits + "b"]]
+    assert np.array_equal(got[:3], want)
+    null = [int(hashlib.md5(f"{j}|{epoch}".encode()).hexdigest()[:8], 16)
+            % 16777216 / 16777216.0 for j in range(nh)]
+    assert np.array_equal(got[3], null)
+
+
+def test_sampled_kernel_receives_only_vector_and_string_id(spark, monkeypatch):
+    """Arrow-boundary ratchet: a sampled cd1_gradient_collect sends its
+    mapInPandas exactly two columns, the vector and the row id as a
+    string. The draws are hashed in the kernel; no array<double> uniform
+    column crosses the boundary."""
+    from hadoop_digit_recognition_spark.rbm import cd1
+
+    df = spark.createDataFrame([(i, [0.1 * i, 0.5]) for i in range(6)],
+                               "vec_id bigint, v array<double>")
+    built = []
+    real = cd1._cd1_blocks
+    monkeypatch.setattr(cd1, "_cd1_blocks",
+                        lambda *a, **k: built.append(real(*a, **k)) or built[-1])
+    cd1.cd1_gradient_collect(df, "v", init_weights_sin(2, 3), sampled=True,
+                             id_col="vec_id")
+    plan = built[0][0]._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "MapInPandas"
+    sent = [(f.name(), f.dataType().simpleString())
+            for f in plan.child().schema().fields()]
+    assert sent == [("v", "array<double>"), ("__id", "string")]
 
 
 @pytest.mark.parametrize("name", RBM_QUERIES)
