@@ -11,6 +11,12 @@ below is nevertheless written for the 1000-executor / 100 TB design point:
   (streaming/pipeline.py) set their own width.
 - Arrow enabled: every pandas-UDF boundary is columnar, not pickled rows.
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- The generated-class cache holds the engine's whole working set. With
+  Spark's 100-entry default, one iterative pass (about 170 classes)
+  evicted each query's classes before the next pass reused them, so every
+  pass recompiled, reloaded and re-JITed all of them. Sessions the engine
+  did not create (a harness's plain SparkSession) keep Spark's default:
+  the setting is static and cannot be changed once the session runs.
 """
 
 from __future__ import annotations
@@ -38,6 +44,13 @@ def get_spark(app_name: str = "hdr-spark",
         # composed frames were persisted without this; SPARK-37442).
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
                 "true")
+        # Static: how many Janino-compiled classes stay cached, keyed by
+        # their generated source. Measured on 4 cores: at Spark's default
+        # 100 one iterative_tail pass compiles 168-172 classes and one
+        # cold bench.HEADLINE_V2 pass at sf0.01 694, every pass again.
+        # Uncapped, that HEADLINE_V2 pass needs 595 distinct classes (630
+        # over two passes, the second compiling 35); 2000 is over 3x that.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -8,6 +8,8 @@ pushdown and column pruning for free (SURVEY.md S1/S2).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = [
@@ -16,10 +18,43 @@ TABLE_NAMES = [
 ]
 
 
+# path -> (stamp, the StructType Spark inferred for it). The stamp is the
+# (inode, size, mtime) of every file under the path, so a rewritten table
+# is inferred again. Metadata only, like Spark's own file-status cache:
+# no persisted data outlives a query.
+_SCHEMAS: dict = {}
+
+
+def _stamp(path: str) -> tuple:
+    files = [path]
+    if os.path.isdir(path):
+        files = sorted(os.path.join(d, f)
+                       for d, _, fs in os.walk(path) for f in fs)
+    stamp = []
+    for f in files:
+        st = os.stat(f)
+        stamp.append((f, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table. A bare spark.read.parquet runs a one-task job to
+    infer the schema on every call; the schema Spark inferred the first
+    time is reused while the files are unchanged, so later reads (and
+    query builds) run no job. events is not memoized: its inferred
+    schema depends on the nanosAsLong conf _load_events sets itself."""
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if not os.path.exists(path):  # a URI, or missing: Spark decides
+        return spark.read.parquet(path)
+    stamp = _stamp(path)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (stamp, df.schema)
+    return df
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,9 +3,14 @@
 stages and tasks plus summed task metrics (executor run/CPU time, GC,
 shuffle bytes) — structural evidence that is robust to the sandbox's
 minute-scale wall-clock weather (OPTIMIZATION_r11.md's measurement
-appendix).
+appendix) — and the number of classes Spark's codegen compiled for each
+query (CodegenMetrics' compilation count).
 
-Usage: python scripts/profile_query.py q1,q2,... [--cold]
+The session is session.get_spark's own; the event log is turned on
+through PYSPARK_SUBMIT_ARGS before the JVM starts, so the profile
+measures the same program the bench and the tests run.
+
+Usage: python scripts/profile_query.py q1,q2,...
 """
 
 from __future__ import annotations
@@ -13,52 +18,33 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shlex
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
 from hadoop_digit_recognition_spark.all_queries import SPARK_QUERIES  # noqa: E402
+from hadoop_digit_recognition_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     names = sys.argv[1].split(",")
     evdir = "/tmp/hdr_evlog"
-    os.makedirs(evdir, exist_ok=True)
-    import shutil
     shutil.rmtree(evdir, ignore_errors=True)
-    os.makedirs(evdir, exist_ok=True)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    os.makedirs(evdir)
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--conf=spark.eventLog.enabled=true",
+        f"--conf=spark.eventLog.dir={evdir}",
+        "--conf=spark.eventLog.compress=false",
+        "--conf=spark.eventLog.rolling.enabled=false",
+        "pyspark-shell"])
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from hadoop_digit_recognition_spark.session import get_spark as _gs
-    import hadoop_digit_recognition_spark.session as _sess
-    builder_extra = {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": evdir,
-    }
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .appName("hdr-profile")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-             .config("spark.sql.adaptive.skewJoin.enabled", "true")
-             .config(
-                 "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                 "true")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-             .config("spark.driver.memory",
-                     os.environ.get("SPARK_DRIVER_MEM", "8g"))
-             .config("spark.ui.enabled", "false")
-             .config("spark.eventLog.enabled", "true")
-             .config("spark.eventLog.dir", evdir)
-             .config("spark.eventLog.compress", "false")
-             .config("spark.eventLog.rolling.enabled", "false")
-             .getOrCreate())
-    _ = (_gs, _sess, builder_extra)
+    spark = get_spark("hdr-profile")
     spark.sparkContext.setLogLevel("ERROR")
+    codegen = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+               .METRIC_COMPILATION_TIME())
     from hadoop_digit_recognition_spark.operators.dedup import (
         clear_signature_cache,
     )
@@ -67,14 +53,16 @@ def main() -> None:
     SPARK_QUERIES["scan_filter_project"](spark, sf_dir).write.format(
         "noop").mode("overwrite").save()
 
-    marks = {}
+    marks, compiles = {}, {}
     for name in names:
         clear_signature_cache(spark)
         spark.sparkContext.setJobDescription(f"PROFILE:{name}")
+        c0 = codegen.getCount()
         t0 = time.perf_counter()
         df = SPARK_QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         marks[name] = time.perf_counter() - t0
+        compiles[name] = codegen.getCount() - c0
         spark.sparkContext.setJobDescription(None)
     spark.stop()
 
@@ -86,7 +74,8 @@ def main() -> None:
                  and "appstatus" not in f]
         log = sorted(inner)[-1]
     per = {n: dict(jobs=0, stages=0, tasks=0, run_ms=0, cpu_ms=0,
-                   gc_ms=0, shuf_read=0, shuf_write=0, wall=marks[n])
+                   gc_ms=0, shuf_read=0, shuf_write=0, wall=marks[n],
+                   compiles=compiles[n])
            for n in names}
     stage_owner = {}
     cur = None
@@ -125,6 +114,7 @@ def main() -> None:
         p = per[n]
         print(f"{n}: wall={p['wall']:.2f}s jobs={p['jobs']} "
               f"stages={p['stages']} tasks={p['tasks']} "
+              f"compiles={p['compiles']} "
               f"run={p['run_ms']/1000:.1f}s cpu={p['cpu_ms']/1000:.1f}s "
               f"gc={p['gc_ms']/1000:.1f}s "
               f"shufR={p['shuf_read']//1024}K shufW={p['shuf_write']//1024}K",

@@ -269,3 +269,29 @@ def test_knn_graph_plan_stays_bucketed(spark):
     assert "CartesianProduct" not in txt
     assert "BroadcastNestedLoopJoin" not in txt
     assert "BatchEvalPython" not in txt
+
+
+def test_codegen_cache_keeps_the_working_set(spark):
+    """A pass of the iterative driver loops needs more generated classes
+    than Spark's default 100-entry codegen cache holds, and an evicting
+    cache recompiles, reloads and re-JITs every class on every pass.
+    200 distinct one-row projections are compiled on the driver
+    (executedPlan().execute() compiles without running a job); building
+    the first one again must hit the cache. Guava splits the cap over 4
+    segments, so at the default cap the first class is evicted."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles():
+        return cm.METRIC_COMPILATION_TIME().getCount()
+
+    def build(i):
+        spark.range(1).selectExpr(f"id * {i} + 7919 AS v") \
+            ._jdf.queryExecution().executedPlan().execute()
+
+    start = compiles()
+    for i in range(7919, 7919 + 200):
+        build(i)
+    assert compiles() - start >= 200
+    before = compiles()
+    build(7919)
+    assert compiles() == before

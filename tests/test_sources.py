@@ -280,6 +280,41 @@ def test_dataset_tag_tracks_content(tmp_path):
     assert dataset_tag("/root/testdata/sf0.001", "events") != t2
 
 
+def test_load_reuses_inferred_schema_until_rewritten(spark, tmp_path):
+    """tables.load infers a table's parquet schema with a one-task job
+    once; a second load of the unchanged files runs no job and reads the
+    same schema, and a table rewritten at the same path is inferred
+    again."""
+    from hadoop_digit_recognition_spark.tables import load
+
+    sc = spark.sparkContext
+    sf = str(tmp_path)
+    path = f"{sf}/probe.parquet"
+
+    def jobs_of_load(tag):
+        group = f"tables-load-{tag}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            df = load(spark, sf, "probe")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df.schema, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    spark.range(3).write.parquet(path)
+    first, jobs = jobs_of_load("cold")
+    assert (first.names, jobs) == (["id"], 1)
+    assert jobs_of_load("warm") == (first, 0)
+
+    spark.range(3).selectExpr("id", "id * 2 AS twice") \
+        .write.mode("overwrite").parquet(path)
+    rewritten, jobs = jobs_of_load("rewritten")
+    assert (rewritten.names, jobs) == (["id", "twice"], 1)
+    assert sorted(r.twice for r in load(spark, sf, "probe").collect()) \
+        == [0, 2, 4]
+
+
 def test_ivf_partitioned_probe_vs_duckdb(spark, duck):
     from hadoop_digit_recognition_spark.all_queries import (
         ORACLE_SQL, SPARK_QUERIES)
