@@ -64,8 +64,8 @@ class DBNFeaturizer(Transformer):
     extraction composes in a real `Pipeline` with any downstream
     estimator (`Pipeline(stages=[featurizer, LogisticRegression()])` ->
     `PipelineModel`). Wraps rbm.trainer.DBN.transform: the forward pass
-    is a narrow mapInPandas stage; the weights ride in the closure as
-    broadcast NumPy."""
+    is one narrow Arrow UDF per layer (rbm.cd1.forward_prop_df), each
+    reading its layer's weights from a broadcast."""
 
     def __init__(self, dbn, vec_col: str = "embedding",
                  out_col: str = "features"):

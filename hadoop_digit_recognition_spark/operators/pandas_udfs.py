@@ -3,8 +3,10 @@
 ARE the UDF surface).
 
 Coverage across the engine:
-- scalar pandas_udf      -> rbm.cd1.forward_prop_df
-- mapInPandas            -> rbm.cd1.cd1_gradient_df, multimodal
+- scalar pandas_udf      -> timeseries_dtw_pairs HERE
+- scalar arrow_udf       -> rbm.cd1.forward_prop_df
+- mapInArrow             -> rbm.cd1.cd1_gradient_df (the CD-1 kernel)
+- mapInPandas            -> multimodal
 - applyInPandasWithState -> streaming.running_user_counts
 - applyInPandas (grouped map), grouped-agg pandas_udf, Python UDTF -> HERE
 

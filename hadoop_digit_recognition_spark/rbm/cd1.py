@@ -27,14 +27,22 @@ kernel hashes each Arrow batch's (rows, numhid) draws itself with a
 vectorized NumPy MD5 (_md5_uniforms). The reference uses a fresh unseeded
 Random per record and is irreproducible by construction
 (/root/reference/rbmmapper.java:169).
+
+Both kernels are Arrow-native (mapInArrow for the gradient blocks,
+arrow_udf for forward prop): each list<double> column is read as a
+zero-copy (rows, dims) NumPy view (_matrix) and each result goes back as
+one flat Arrow list array (_list_array), so no row is boxed into pandas
+or Python floats on either side of the worker boundary.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -211,11 +219,24 @@ def numpy_cd1_sampled(V: np.ndarray, W: np.ndarray, U: np.ndarray,
     return V.T @ h0p - v1.T @ h1p
 
 
-def _to_matrix(series: pd.Series, numdims: int) -> np.ndarray:
-    """Arrow list column -> (n, numdims) float64 matrix."""
-    if len(series) == 0:
-        return np.empty((0, numdims), dtype=np.float64)
-    return np.vstack(series.to_numpy()).astype(np.float64, copy=False)
+def _matrix(col: pa.Array, dims: int) -> np.ndarray:
+    """Arrow list column -> (rows, dims) float64 matrix, a zero-copy view
+    of a double column's values. A null row, or one of another length,
+    raises."""
+    lens = pc.list_value_length(col)
+    if lens.null_count or pc.any(pc.not_equal(lens, dims)).as_py():
+        raise ValueError(f"every row must hold {dims} values")
+    return (col.flatten().to_numpy().reshape(len(col), dims)
+            .astype(np.float64, copy=False))
+
+
+def _list_array(M: np.ndarray) -> pa.ListArray:
+    """(rows, d) matrix -> Arrow list<double> column, one row per row,
+    built from M's values and a uniform offset run."""
+    rows, d = M.shape
+    return pa.ListArray.from_arrays(
+        np.arange(0, rows * d + 1, d, dtype=np.int32),
+        np.ascontiguousarray(M, dtype=np.float64).ravel())
 
 
 def _cd1_full_sums(V: np.ndarray, W: np.ndarray) -> np.ndarray:
@@ -230,8 +251,9 @@ def _cd1_full_sums(V: np.ndarray, W: np.ndarray) -> np.ndarray:
 
 
 def _cd1_blocks(df: DataFrame, vec_col: str, W: np.ndarray, sampled: bool,
-                id_col: str | None, epoch: int, biases: bool = False):
-    """The one CD-1 kernel: a mapInPandas yielding ONE row per partition,
+                id_col: str | None, epoch: int, biases: bool = False,
+                below: Sequence = ()):
+    """The one CD-1 kernel: a mapInArrow yielding ONE row per partition,
     (n bigint, acc array<double>): the partition's row count and its
     row-major (i*numhid+j, not defect D3) sum of posprods - negprods,
     followed by the hidden- and visible-bias sums when biases=True
@@ -240,7 +262,12 @@ def _cd1_blocks(df: DataFrame, vec_col: str, W: np.ndarray, sampled: bool,
     unit, epoch), see det_uniforms, so the result is partition-invariant
     and exactly reproducible in the SQL oracle. Only the id crosses the
     Arrow boundary, as a string; the kernel hashes each batch's draws
-    (_md5_uniforms)."""
+    (_md5_uniforms).
+
+    below: broadcast weights of the frozen layers under this one, bottom
+    first. The kernel forward-props each batch through them,
+    V <- sigmoid(V @ Wk), before the CD-1 math, so a DBN layer trains on
+    its input copy without a forward-prop node or an activation copy."""
     from ..shipping import ensure_shipped
 
     if sampled and id_col is None:
@@ -252,27 +279,33 @@ def _cd1_blocks(df: DataFrame, vec_col: str, W: np.ndarray, sampled: bool,
     b_w = spark.sparkContext.broadcast(np.ascontiguousarray(W, dtype=np.float64))
     width = nd * nh + (nh + nd if biases else 0)
 
-    def block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def block(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         Wv = b_w.value
+        lower = [b.value for b in below]
+        dims = lower[0].shape[0] if lower else nd
         acc = np.zeros(width, dtype=np.float64)
         n = 0
-        for pdf in batches:
-            V = _to_matrix(pdf[vec_col], nd)
+        for batch in batches:
+            V = _matrix(batch.column(0), dims)
+            for Wk in lower:
+                V = _sigmoid(V @ Wk)
             n += len(V)
             if biases:
                 acc += _cd1_full_sums(V, Wv)
             elif sampled:
-                U = _md5_uniforms(pdf["__id"].tolist(), nh, epoch)
+                U = _md5_uniforms(batch.column(1).to_pylist(), nh, epoch)
                 acc += numpy_cd1_sampled(V, Wv, U).ravel()
             else:
                 acc += numpy_cd1_meanfield(V, Wv).ravel()
-        yield pd.DataFrame({"n": [n], "acc": [acc]})
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([n], pa.int64()), _list_array(acc[None, :])],
+            names=["n", "acc"])
 
     # Spark's cast fixes the hashed text for every id type, as the oracle's
     # CAST(vec_id AS VARCHAR) does
     rid = [F.col(id_col).cast("string").alias("__id")] if sampled else []
     return (df.select(F.col(vec_col), *rid)
-            .mapInPandas(block, schema="n bigint, acc array<double>"), b_w)
+            .mapInArrow(block, schema="n bigint, acc array<double>"), b_w)
 
 
 def _keyed_sum(blocks: DataFrame) -> DataFrame:
@@ -315,12 +348,16 @@ def cd1_gradient_df(df: DataFrame, vec_col: str, W: np.ndarray,
 def cd1_gradient_collect(df: DataFrame, vec_col: str, W: np.ndarray,
                          epsilon: float = 0.1, numcase: int | None = None,
                          sampled: bool = False, id_col: str | None = None,
-                         epoch: int = 0, weightcost: float = 0.0) -> np.ndarray:
+                         epoch: int = 0, weightcost: float = 0.0,
+                         _below: Sequence = ()) -> np.ndarray:
     """Production path: one job brings the P _cd1_blocks rows to the
     driver as Arrow (weight-sized data, never rows; SURVEY.md §7) and sums
     them in partition order. Returns the (numdims, numhid) delta
-    epsilon * (gsum/numcase - weightcost*W), numcase defaulting to sum(n)."""
-    blocks, b_w = _cd1_blocks(df, vec_col, W, sampled, id_col, epoch)
+    epsilon * (gsum/numcase - weightcost*W), numcase defaulting to sum(n).
+    _below: the broadcast frozen weights a DBN layer's kernel forward-props
+    its input through first (see _cd1_blocks)."""
+    blocks, b_w = _cd1_blocks(df, vec_col, W, sampled, id_col, epoch,
+                              below=_below)
     tbl = blocks.toArrow()
     b_w.unpersist()
     acc = tbl.column("acc").combine_chunks().flatten().to_numpy()
@@ -332,7 +369,8 @@ def cd1_gradient_collect(df: DataFrame, vec_col: str, W: np.ndarray,
 
 def forward_prop_df(df: DataFrame, vec_col: str, W: np.ndarray,
                     out_col: str = "hidden", quantize: bool = False) -> DataFrame:
-    """Forward propagation h = sigmoid(v*W) as a narrow stage — no shuffle.
+    """Forward propagation h = sigmoid(v*W) as a narrow stage — no shuffle:
+    an Arrow UDF over each batch's (rows, numdims) view.
 
     The reference runs this as a full MapReduce job with an identity
     reducer, i.e. a pointless shuffle (/root/reference/propreducer.java:16-23,
@@ -345,11 +383,9 @@ def forward_prop_df(df: DataFrame, vec_col: str, W: np.ndarray,
     nd, nh = W.shape
     b_w = spark.sparkContext.broadcast(np.ascontiguousarray(W, dtype=np.float64))
 
-    @F.pandas_udf("array<double>")
-    def fprop(v: pd.Series) -> pd.Series:
-        V = _to_matrix(v, nd)
-        H = _sigmoid(V @ b_w.value)
-        return pd.Series(list(H))
+    @F.arrow_udf("array<double>")
+    def fprop(v: pa.Array) -> pa.Array:
+        return _list_array(_sigmoid(_matrix(v, nd) @ b_w.value))
 
     out = df.withColumn(out_col, fprop(F.col(vec_col)))
     if quantize:

@@ -60,7 +60,7 @@ FROM pos JOIN neg ON pos.i = neg.i AND pos.j = neg.j CROSS JOIN nc
 @query("rbm_cd1_epoch", oracle=_CD1_ORACLE)
 def rbm_cd1_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One full-batch mean-field CD-1 gradient epoch (the flagship):
-    sin-init weights, mapInPandas batch math, posexplode + groupBy(idx)
+    sin-init weights, mapInArrow batch math, posexplode + groupBy(idx)
     keyed-sum — the reference's entire MapReduce job as one plan."""
     emb = load(spark, sf_dir, "embeddings")
     W = init_weights_sin(NUMDIMS, NUMHID)

@@ -10,6 +10,8 @@ never touch storage (SURVEY.md O4/O5/O7).
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -19,6 +21,14 @@ from .cd1 import (
     forward_prop_df,
     init_weights_gaussian,
 )
+
+
+def _persist_input(df: DataFrame, vec_col: str, sampled: bool,
+                   id_col: str | None) -> DataFrame:
+    """The training input narrowed to what the kernel reads (the vector,
+    plus the row id when sampled), persisted for the epoch loop."""
+    cols = [id_col, vec_col] if sampled else [vec_col]
+    return df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 class RBMTrainer:
@@ -53,16 +63,25 @@ class RBMTrainer:
 
     def fit(self, df: DataFrame, vec_col: str,
             W0: np.ndarray | None = None) -> np.ndarray:
+        # The first epoch's job fills the copy; later epochs read the
+        # parsed, narrowed rows from it instead of the source.
+        cached = _persist_input(df, vec_col, self.sampled, self.id_col)
+        try:
+            return self._train(cached, vec_col, W0)
+        finally:
+            cached.unpersist()
+
+    def _train(self, cached: DataFrame, vec_col: str,
+               W0: np.ndarray | None = None,
+               below: Sequence[np.ndarray] = ()) -> np.ndarray:
+        """The epoch loop over an already persisted input. below: frozen
+        weights of the layers under this one (a DBN layer), broadcast once
+        here and applied by the kernel to every batch of every epoch."""
         W = (init_weights_gaussian(self.numdims, self.numhid, seed=self.seed)
              if W0 is None else W0.astype(np.float64).copy())
-
-        cols = [self.id_col, vec_col] if self.sampled else [vec_col]
-        # Persisted even for one epoch: filling the copy drains an upstream
-        # Python node (a DBN layer's forward_prop_df) before the CD-1 kernel
-        # starts, so the kernel reuses the worker it released. Unpersisted,
-        # the two stream into each other and every task holds two Python
-        # workers (+600 MB peak RSS for a 784-500-500 DBN on 4 cores).
-        cached = df.select(*cols).persist(StorageLevel.MEMORY_AND_DISK)
+        sc = cached.sparkSession.sparkContext
+        b_below = [sc.broadcast(np.ascontiguousarray(Wk, dtype=np.float64))
+                   for Wk in below]
         try:
             # one job per epoch and no shuffle: each partition yields one
             # dense gradient block and the driver sums them. The observed
@@ -73,14 +92,15 @@ class RBMTrainer:
                     cached, vec_col, W, epsilon=self.epsilon,
                     numcase=self.numcase, sampled=self.sampled,
                     id_col=self.id_col, epoch=epoch,
-                    weightcost=self.weightcost)
+                    weightcost=self.weightcost, _below=b_below)
                 vel = self.momentum * vel + delta
                 W += vel
                 if self.round3:
                     # HALF_EVEN like DecimalFormat (np.round is banker's)
                     W = np.round(W * 1000.0) / 1000.0
         finally:
-            cached.unpersist()
+            for b in b_below:
+                b.unpersist()
         self.W = W
         return W
 
@@ -97,11 +117,18 @@ class DBN:
     Reference: per layer pair, maxEpoch RBM jobs then one prop job whose
     TEXT output directory becomes the next layer's input
     (/root/reference/driver.java:64-287). Here activations flow between
-    layers as lazy array<double> columns — columnar, no re-parse. Each
-    layer's RBMTrainer.fit persists the narrowed copy it trains on and
-    releases it, so fit leaves nothing persisted; layer k's copy
-    re-derives layers 1..k-1 once, which costs nothing extra for a
-    two-RBM stack."""
+    layers only inside the CD-1 kernel: fit persists the narrowed input
+    once and trains every layer on that one copy, and layer k's kernel
+    gets the frozen weights of layers 1..k-1 (broadcast once per layer)
+    and forward-props each batch through them before the CD-1 math. So
+    the source is parsed once, no activation copy is cached, each task
+    runs one Python node, and fit leaves nothing persisted.
+
+    The trade-off: each epoch of layer k recomputes the forward prop of
+    the k-1 layers below it (one matmul per lower layer, against CD-1's
+    five) instead of persisting their activations. At one epoch per
+    layer that costs nothing extra; with many epochs on deep stacks it
+    is the price of holding only the input copy."""
 
     def __init__(self, layer_sizes: list[int], max_epoch: int = 1,
                  epsilon: float = 0.1, seed: int = 42, sampled: bool = False,
@@ -122,17 +149,18 @@ class DBN:
         if w0s is not None and len(w0s) != len(self.layer_sizes) - 1:
             raise ValueError("w0s must have one matrix per layer pair")
         self.weights = []
-        cur, cur_col = df, vec_col
-        for layer, (nd, nh) in enumerate(zip(self.layer_sizes, self.layer_sizes[1:])):
-            t = RBMTrainer(nd, nh, epsilon=self.epsilon, max_epoch=self.max_epoch,
-                           seed=self.seed + layer, sampled=self.sampled,
-                           id_col=self.id_col)
-            W = t.fit(cur, cur_col, W0=None if w0s is None else w0s[layer])
-            self.weights.append(W)
-            if layer < len(self.layer_sizes) - 2:
-                nxt_col = f"__act{layer + 1}"
-                cur = forward_prop_df(cur, cur_col, W, out_col=nxt_col)
-                cur_col = nxt_col
+        cached = _persist_input(df, vec_col, self.sampled, self.id_col)
+        try:
+            for layer, (nd, nh) in enumerate(zip(self.layer_sizes,
+                                                 self.layer_sizes[1:])):
+                t = RBMTrainer(nd, nh, epsilon=self.epsilon,
+                               max_epoch=self.max_epoch, seed=self.seed + layer,
+                               sampled=self.sampled, id_col=self.id_col)
+                self.weights.append(t._train(
+                    cached, vec_col, W0=None if w0s is None else w0s[layer],
+                    below=self.weights[:layer]))
+        finally:
+            cached.unpersist()
         return self
 
     def transform(self, df: DataFrame, vec_col: str,

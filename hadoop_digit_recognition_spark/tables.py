@@ -18,10 +18,11 @@ TABLE_NAMES = [
 ]
 
 
-# path -> (stamp, the StructType Spark inferred for it). The stamp is the
-# (inode, size, mtime) of every file under the path, so a rewritten table
-# is inferred again. Metadata only, like Spark's own file-status cache:
-# no persisted data outlives a query.
+# (path, conf) -> (stamp, the StructType Spark inferred for it). The stamp
+# is the (inode, size, mtime) of every file under the path, so a rewritten
+# table is inferred again; conf is the value of a reader setting the
+# inferred schema depends on (events' nanosAsLong). Metadata only, like
+# Spark's own file-status cache: no persisted data outlives a query.
 _SCHEMAS: dict = {}
 
 
@@ -37,24 +38,29 @@ def _stamp(path: str) -> tuple:
     return tuple(stamp)
 
 
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. A bare spark.read.parquet runs a one-task job to
-    infer the schema on every call; the schema Spark inferred the first
-    time is reused while the files are unchanged, so later reads (and
-    query builds) run no job. events is not memoized: its inferred
-    schema depends on the nanosAsLong conf _load_events sets itself."""
-    if name == "events":
-        return _load_events(spark, sf_dir)
-    path = f"{sf_dir}/{name}.parquet"
+def _read_parquet(spark: SparkSession, path: str,
+                  conf: str | None = None) -> DataFrame:
+    """spark.read.parquet, reusing the schema Spark inferred the first
+    time while the files (and conf) are unchanged. A bare read runs a
+    one-task job to infer the schema on every call; a reused schema makes
+    later reads (and query builds) run no job."""
     if not os.path.exists(path):  # a URI, or missing: Spark decides
         return spark.read.parquet(path)
     stamp = _stamp(path)
-    hit = _SCHEMAS.get(path)
+    hit = _SCHEMAS.get((path, conf))
     if hit is not None and hit[0] == stamp:
         return spark.read.schema(hit[1]).parquet(path)
     df = spark.read.parquet(path)
-    _SCHEMAS[path] = (stamp, df.schema)
+    _SCHEMAS[(path, conf)] = (stamp, df.schema)
     return df
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one table (its inferred parquet schema reused, see
+    _read_parquet)."""
+    if name == "events":
+        return _load_events(spark, sf_dir)
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,8 +76,10 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(nanos, "true")
+    raw = _read_parquet(spark, f"{sf_dir}/events.parquet",
+                        conf=spark.conf.get(nanos))
     ts_type = raw.schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         # nanos-as-long generation: truncate to micros with integer

@@ -53,16 +53,19 @@ def main() -> None:
     SPARK_QUERIES["scan_filter_project"](spark, sf_dir).write.format(
         "noop").mode("overwrite").save()
 
-    marks, compiles = {}, {}
-    for name in names:
+    # one record per position in the list, so a repeated name gets its own
+    per = []
+    for i, name in enumerate(names):
         clear_signature_cache(spark)
-        spark.sparkContext.setJobDescription(f"PROFILE:{name}")
+        spark.sparkContext.setJobDescription(f"PROFILE:{i}")
         c0 = codegen.getCount()
         t0 = time.perf_counter()
         df = SPARK_QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        marks[name] = time.perf_counter() - t0
-        compiles[name] = codegen.getCount() - c0
+        per.append(dict(name=name, jobs=0, stages=0, tasks=0, run_ms=0,
+                        cpu_ms=0, gc_ms=0, shuf_read=0, shuf_write=0,
+                        wall=time.perf_counter() - t0,
+                        compiles=codegen.getCount() - c0))
         spark.sparkContext.setJobDescription(None)
     spark.stop()
 
@@ -73,46 +76,37 @@ def main() -> None:
                 [f for f in glob.glob(log + "/*") if os.path.isfile(f)
                  and "appstatus" not in f]
         log = sorted(inner)[-1]
-    per = {n: dict(jobs=0, stages=0, tasks=0, run_ms=0, cpu_ms=0,
-                   gc_ms=0, shuf_read=0, shuf_write=0, wall=marks[n],
-                   compiles=compiles[n])
-           for n in names}
     stage_owner = {}
-    cur = None
     with open(log) as f:
         for line in f:
             e = json.loads(line)
             ev = e.get("Event")
             if ev == "SparkListenerJobStart":
                 d = e.get("Properties", {}).get("spark.job.description", "")
-                cur = d[8:] if d.startswith("PROFILE:") else None
-                if cur in per:
-                    per[cur]["jobs"] += 1
+                if d.startswith("PROFILE:"):
+                    p = per[int(d[8:])]
+                    p["jobs"] += 1
                     for s in e.get("Stage Infos", []):
-                        stage_owner[s["Stage ID"]] = cur
+                        stage_owner[s["Stage ID"]] = p
             elif ev == "SparkListenerStageCompleted":
-                sid = e["Stage Info"]["Stage ID"]
-                o = stage_owner.get(sid)
-                if o in per:
-                    per[o]["stages"] += 1
-                    per[o]["tasks"] += e["Stage Info"].get(
-                        "Number of Tasks", 0)
+                p = stage_owner.get(e["Stage Info"]["Stage ID"])
+                if p is not None:
+                    p["stages"] += 1
+                    p["tasks"] += e["Stage Info"].get("Number of Tasks", 0)
             elif ev == "SparkListenerTaskEnd":
-                o = stage_owner.get(e.get("Stage ID"))
-                if o in per and e.get("Task Metrics"):
+                p = stage_owner.get(e.get("Stage ID"))
+                if p is not None and e.get("Task Metrics"):
                     m = e["Task Metrics"]
-                    per[o]["run_ms"] += m.get("Executor Run Time", 0)
-                    per[o]["cpu_ms"] += m.get(
-                        "Executor CPU Time", 0) // 1_000_000
-                    per[o]["gc_ms"] += m.get("JVM GC Time", 0)
+                    p["run_ms"] += m.get("Executor Run Time", 0)
+                    p["cpu_ms"] += m.get("Executor CPU Time", 0) // 1_000_000
+                    p["gc_ms"] += m.get("JVM GC Time", 0)
                     sr = m.get("Shuffle Read Metrics", {})
-                    per[o]["shuf_read"] += (sr.get("Remote Bytes Read", 0)
-                                            + sr.get("Local Bytes Read", 0))
+                    p["shuf_read"] += (sr.get("Remote Bytes Read", 0)
+                                       + sr.get("Local Bytes Read", 0))
                     sw = m.get("Shuffle Write Metrics", {})
-                    per[o]["shuf_write"] += sw.get("Shuffle Bytes Written", 0)
-    for n in names:
-        p = per[n]
-        print(f"{n}: wall={p['wall']:.2f}s jobs={p['jobs']} "
+                    p["shuf_write"] += sw.get("Shuffle Bytes Written", 0)
+    for p in per:
+        print(f"{p['name']}: wall={p['wall']:.2f}s jobs={p['jobs']} "
               f"stages={p['stages']} tasks={p['tasks']} "
               f"compiles={p['compiles']} "
               f"run={p['run_ms']/1000:.1f}s cpu={p['cpu_ms']/1000:.1f}s "

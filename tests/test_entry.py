@@ -49,15 +49,15 @@ def test_unchanged_zip_is_not_reparsed(tmp_path):
 
 
 def test_worker_does_not_reparse_unchanged_zips(spark):
-    """The same fix inside Spark's Python workers. An engine mapInPandas
+    """The same fix inside Spark's Python workers. An engine mapInArrow
     runs twice; in the second job every task counts the zip directory
     reads of one importlib.invalidate_caches() and must see none. The
     call before the count lets a worker that has only just imported the
     engine package record its archives first."""
-    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from hadoop_digit_recognition_spark.rbm.cd1 import _to_matrix
+    from hadoop_digit_recognition_spark.rbm.cd1 import _matrix
     from hadoop_digit_recognition_spark.shipping import ensure_shipped
 
     ensure_shipped(spark)
@@ -65,10 +65,10 @@ def test_worker_does_not_reparse_unchanged_zips(spark):
         F.array(F.col("id").cast("double")).alias("v"))
 
     def probe(batches):
-        # _to_matrix is pickled by reference: unpickling imports the engine
+        # _matrix is pickled by reference: unpickling imports the engine
         import zipimport
 
-        n = sum(len(_to_matrix(pdf["v"], 1)) for pdf in batches)
+        n = sum(len(_matrix(b.column(0), 1)) for b in batches)
         importlib.invalidate_caches()
         original = zipimport._read_directory
         reads = []
@@ -77,10 +77,10 @@ def test_worker_does_not_reparse_unchanged_zips(spark):
             importlib.invalidate_caches()
         finally:
             zipimport._read_directory = original
-        yield pd.DataFrame({"n": [n], "reads": [len(reads)]})
+        yield pa.RecordBatch.from_pydict({"n": [n], "reads": [len(reads)]})
 
     for _ in range(2):
-        rows = df.mapInPandas(probe, "n bigint, reads bigint").collect()
+        rows = df.mapInArrow(probe, "n bigint, reads bigint").collect()
     assert sum(r.n for r in rows) == 8
     assert [r.reads for r in rows] == [0, 0]
 

@@ -85,7 +85,7 @@ def test_scan_filter_project_reads_minimum(spark):
 def test_no_python_udfs_in_relational_paths(spark):
     """Relational/text/dedup queries must stay JVM-side: BatchEvalPython
     (row-at-a-time Python) must not appear anywhere; the sanctioned
-    Python surface (mapInPandas for CD-1) is Arrow-batched."""
+    Python surface (mapInArrow for CD-1) is Arrow-batched."""
     for name in ["q1_pricing_summary", "join_star_nation_revenue",
                  "dedup_minhash_lsh", "text_tfidf_top_terms",
                  "window_session", "sim_topk_cosine"]:

@@ -3,6 +3,8 @@ NumPy model checks for the CD-1 math (SURVEY.md §5.3)."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -12,6 +14,7 @@ from hadoop_digit_recognition_spark.rbm.cd1 import (
     init_weights_sin,
     numpy_cd1_meanfield,
 )
+from hadoop_digit_recognition_spark.rbm.trainer import DBN
 
 from .conftest import SF_ORACLE
 from .oracle_harness import compare
@@ -68,7 +71,7 @@ def test_md5_uniforms_string_and_null_ids(monkeypatch):
 
 def test_sampled_kernel_receives_only_vector_and_string_id(spark, monkeypatch):
     """Arrow-boundary ratchet: a sampled cd1_gradient_collect sends its
-    mapInPandas exactly two columns, the vector and the row id as a
+    mapInArrow exactly two columns, the vector and the row id as a
     string. The draws are hashed in the kernel; no array<double> uniform
     column crosses the boundary."""
     from hadoop_digit_recognition_spark.rbm import cd1
@@ -82,7 +85,7 @@ def test_sampled_kernel_receives_only_vector_and_string_id(spark, monkeypatch):
     cd1.cd1_gradient_collect(df, "v", init_weights_sin(2, 3), sampled=True,
                              id_col="vec_id")
     plan = built[0][0]._jdf.queryExecution().optimizedPlan()
-    assert plan.nodeName() == "MapInPandas"
+    assert plan.nodeName() == "MapInArrow"
     sent = [(f.name(), f.dataType().simpleString())
             for f in plan.child().schema().fields()]
     assert sent == [("v", "array<double>"), ("__id", "string")]
@@ -147,9 +150,8 @@ def test_cd1_full_gradient_matches_numpy(spark):
 
 
 def test_dbn_fit_leaves_nothing_persisted(spark):
-    """A two-RBM DBN.fit releases every frame it persists: each layer's
-    trainer unpersists its narrowed copy, and nothing between layers is
-    cached on top of it."""
+    """A two-RBM DBN.fit releases every frame it persists: the one
+    narrowed input copy all layers train on."""
     from hadoop_digit_recognition_spark.rbm.trainer import DBN
 
     rng = np.random.default_rng(0)
@@ -163,6 +165,104 @@ def test_dbn_fit_leaves_nothing_persisted(spark):
     before = persisted()
     dbn = DBN([6, 4, 3], sampled=True, id_col="example_id").fit(df, "v")
     assert [W.shape for W in dbn.weights] == [(6, 4), (4, 3)]
+    assert persisted() == before
+
+
+@pytest.mark.parametrize("sampled", [False, True],
+                         ids=["meanfield", "sampled"])
+def test_dbn_layer_two_matches_numpy_on_layer_one_activations(
+        spark, monkeypatch, sampled):
+    """Golden model for the fused stack: every epoch's delta of a
+    two-layer DBN.fit equals NumPy CD-1 on that layer's input, and layer
+    2's input is sigmoid(V @ W1) under the TRAINED layer-1 weights, which
+    its kernel computes per batch from the one persisted input copy."""
+    from hadoop_digit_recognition_spark.rbm import trainer
+    from hadoop_digit_recognition_spark.rbm.cd1 import (
+        det_uniforms, numpy_cd1_sampled)
+
+    rng = np.random.default_rng(3)
+    V = rng.random((40, 12))
+    df = spark.createDataFrame([(i, r.tolist()) for i, r in enumerate(V)],
+                               "example_id bigint, v array<double>")
+    calls = []
+    real = trainer.cd1_gradient_collect
+    monkeypatch.setattr(trainer, "cd1_gradient_collect", lambda *a, **k: (
+        calls.append((a[2].copy(), k["epoch"], real(*a, **k))) or calls[-1][2]))
+    dbn = DBN([12, 8, 5], max_epoch=2, sampled=sampled,
+              id_col="example_id").fit(df, "v")
+
+    W1, W2 = dbn.weights
+    inputs = [V, V, _sigmoid(V @ W1), _sigmoid(V @ W1)]
+    assert len(calls) == len(inputs)
+    for X, (W, epoch, delta) in zip(inputs, calls):
+        if sampled:
+            U = det_uniforms(np.arange(len(X)), W.shape[1], epoch)
+            want = 0.1 * numpy_cd1_sampled(X, W, U) / len(X)
+        else:
+            want = 0.1 * numpy_cd1_meanfield(X, W) / len(X)
+        np.testing.assert_allclose(delta, want, rtol=1e-9, atol=1e-12)
+    np.testing.assert_allclose(W2, calls[3][0] + calls[3][2], rtol=1e-12)
+
+
+def _plan_nodes(df) -> list[str]:
+    """Node names of df's physical plan, cached plans included (an
+    InMemoryRelation prints the plan that fills it)."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()
+    return [re.sub(r"^[\s:|+\-]*(\*\(\d+\) )?", "", line).split(" ")[0]
+            for line in tree.splitlines() if line.strip()]
+
+
+def test_dbn_fit_trains_every_layer_from_one_copy(spark, monkeypatch):
+    """Job, plan and cache ratchet for the fused stack: a two-layer,
+    one-epoch DBN.fit runs 2 jobs of one stage each; each epoch's plan
+    holds exactly one Python node (the CD-1 mapInArrow), no
+    ArrowEvalPython forward prop, cached or not; and every epoch reads the
+    same single persisted input copy."""
+    from hadoop_digit_recognition_spark.rbm import cd1, trainer
+
+    sc = spark.sparkContext
+    rng = np.random.default_rng(0)
+    df = spark.createDataFrame(
+        [(i, rng.random(6).tolist()) for i in range(20)],
+        "example_id bigint, v array<double>")
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    plans, held = [], []
+    real_blocks, real_collect = cd1._cd1_blocks, trainer.cd1_gradient_collect
+
+    def blocks(*a, **k):
+        out = real_blocks(*a, **k)
+        plans.append(_plan_nodes(out[0]))
+        return out
+
+    def collect(*a, **k):
+        out = real_collect(*a, **k)
+        held.append(persisted() - before)
+        return out
+
+    monkeypatch.setattr(cd1, "_cd1_blocks", blocks)
+    monkeypatch.setattr(trainer, "cd1_gradient_collect", collect)
+    group = "dbn-fused-ratchet"
+    sc.setJobGroup(group, group)
+    try:
+        DBN([6, 4, 3], sampled=True, id_col="example_id").fit(df, "v")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    assert (len(jobs), len(stages)) == (2, 2)
+
+    python = [[n for n in p if re.search("Python|Pandas|Arrow", n)]
+              for p in plans]
+    assert python == [["MapInArrow"], ["MapInArrow"]], plans
+    assert len(held) == 2 and all(len(h) == 1 for h in held)
+    assert held[0] == held[1]
     assert persisted() == before
 
 

@@ -284,18 +284,19 @@ def test_load_reuses_inferred_schema_until_rewritten(spark, tmp_path):
     """tables.load infers a table's parquet schema with a one-task job
     once; a second load of the unchanged files runs no job and reads the
     same schema, and a table rewritten at the same path is inferred
-    again."""
+    again. events, whose reader sets nanosAsLong first, is no
+    exception."""
     from hadoop_digit_recognition_spark.tables import load
 
     sc = spark.sparkContext
     sf = str(tmp_path)
     path = f"{sf}/probe.parquet"
 
-    def jobs_of_load(tag):
+    def jobs_of_load(tag, name="probe"):
         group = f"tables-load-{tag}-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
-            df = load(spark, sf, "probe")
+            df = load(spark, sf, name)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
@@ -313,6 +314,13 @@ def test_load_reuses_inferred_schema_until_rewritten(spark, tmp_path):
     assert (rewritten.names, jobs) == (["id", "twice"], 1)
     assert sorted(r.twice for r in load(spark, sf, "probe").collect()) \
         == [0, 2, 4]
+
+    spark.range(3).selectExpr(
+        "id AS event_id", "TIMESTAMP_NTZ '2024-01-01 00:00:00' AS ts") \
+        .write.parquet(f"{sf}/events.parquet")
+    events, jobs = jobs_of_load("events-cold", "events")
+    assert (events.names, jobs) == (["event_id", "ts", "ts_us"], 1)
+    assert jobs_of_load("events-warm", "events") == (events, 0)
 
 
 def test_ivf_partitioned_probe_vs_duckdb(spark, duck):
