@@ -92,7 +92,8 @@ def main(argv: list[str] | None = None) -> int:
     sizes = [int(x) for x in argv[4:4 + num_layer]]
     numcase = int(argv[4 + num_layer]) if len(argv) > 4 + num_layer else None
 
-    from .rbm.trainer import RBMTrainer
+    from .rbm.cd1 import forward_prop_df
+    from .rbm.trainer import DBN
     from .session import get_spark
     from .sources.text_format import read_examples_text, write_weights_text
 
@@ -105,16 +106,17 @@ def main(argv: list[str] | None = None) -> int:
         df = read_examples_text(spark, inp, sizes[0])
         vec_col = "v"
 
-    # layer loop (driver.java:64): train RBM on layer k activations, write
-    # weights in the reference's text format, forward-prop to layer k+1
+    # layer loop (driver.java:64): DBN.fit trains every layer from one
+    # parsed copy of the input; then each layer's weights are written in
+    # the reference's text format and the input forward-propped to act{k}
+    dbn = DBN(sizes, max_epoch=max_epoch, seed=42,
+              numcase=numcase).fit(df, vec_col)
     cur, cur_col = df, vec_col
-    for layer, (nd, nh) in enumerate(zip(sizes, sizes[1:])):
-        t = RBMTrainer(nd, nh, max_epoch=max_epoch, seed=42 + layer,
-                       numcase=numcase)
-        W = t.fit(cur, cur_col)
+    for layer, W in enumerate(dbn.weights):
+        nd, nh = W.shape
         write_weights_text(W, os.path.join(outp, f"weights_{layer}.txt"))
         nxt = f"act{layer + 1}"
-        cur = t.transform(cur, cur_col, out_col=nxt)
+        cur = forward_prop_df(cur, cur_col, W, out_col=nxt)
         cur_col = nxt
         print(f"layer {layer}: {nd}->{nh}, {max_epoch} epochs, "
               f"|W|_mean={abs(W).mean():.6f}")

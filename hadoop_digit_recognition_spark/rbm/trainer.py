@@ -132,13 +132,13 @@ class DBN:
 
     def __init__(self, layer_sizes: list[int], max_epoch: int = 1,
                  epsilon: float = 0.1, seed: int = 42, sampled: bool = False,
-                 id_col: str | None = None):
+                 id_col: str | None = None, numcase: int | None = None):
         if len(layer_sizes) < 2:
             raise ValueError("need at least [numdims, numhid]")
         self.layer_sizes = layer_sizes
         self.max_epoch, self.epsilon, self.seed, self.sampled = (
             max_epoch, epsilon, seed, sampled)
-        self.id_col = id_col
+        self.id_col, self.numcase = id_col, numcase
         self.weights: list[np.ndarray] = []
 
     def fit(self, df: DataFrame, vec_col: str,
@@ -155,7 +155,8 @@ class DBN:
                                                  self.layer_sizes[1:])):
                 t = RBMTrainer(nd, nh, epsilon=self.epsilon,
                                max_epoch=self.max_epoch, seed=self.seed + layer,
-                               sampled=self.sampled, id_col=self.id_col)
+                               sampled=self.sampled, id_col=self.id_col,
+                               numcase=self.numcase)
                 self.weights.append(t._train(
                     cached, vec_col, W0=None if w0s is None else w0s[layer],
                     below=self.weights[:layer]))

@@ -51,6 +51,19 @@ def get_spark(app_name: str = "hdr-spark",
         # Uncapped, that HEADLINE_V2 pass needs 595 distinct classes (630
         # over two passes, the second compiling 35); 2000 is over 3x that.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # Static: the Tungsten page every hash aggregate, sort, unsafe
+        # shuffle writer and hashed broadcast relation allocates and
+        # zeroes on its first record. Spark sizes it from the heap (next
+        # power of two of execution pool / cores / 16, 1-64 MB): 16 MB at
+        # a 2 GB heap and 64 MB at the 8g default on 4 cores, and a
+        # broadcast relation holds its page in storage memory until its
+        # plan is collected. Measured at a 2 GB heap on 4 cores: a
+        # broadcast join against a 10-row string-keyed table added 16.0 MB
+        # of storage memory, 1.0 MB with 1 MB pages. The page table has
+        # 8192 entries, so 1 MB pages let one task address 8 GB, more than
+        # all the execution memory of the 8g default heap (4.6 GB);
+        # SCALE.md has the limit.
+        .config("spark.buffer.pageSize", "1m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

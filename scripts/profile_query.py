@@ -1,10 +1,12 @@
 #!/usr/bin/env python
 """Profile registered queries with the Spark event log: counts of jobs,
 stages and tasks plus summed task metrics (executor run/CPU time, GC,
-shuffle bytes) — structural evidence that is robust to the sandbox's
-minute-scale wall-clock weather (OPTIMIZATION_r11.md's measurement
-appendix) — and the number of classes Spark's codegen compiled for each
-query (CodegenMetrics' compilation count).
+shuffle bytes, the largest task's peak execution memory) — structural
+evidence that is robust to minute-scale wall-clock swings on a shared
+host (OPTIMIZATION_r11.md's measurement appendix) — the number of classes
+Spark's codegen compiled for each query (CodegenMetrics' compilation
+count) and the storage memory the block manager holds right after the
+query ran, before its memoized frames are cleared.
 
 The session is session.get_spark's own; the event log is turned on
 through PYSPARK_SUBMIT_ARGS before the JVM starts, so the profile
@@ -45,6 +47,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     codegen = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
                .METRIC_COMPILATION_TIME())
+    memory = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
     from hadoop_digit_recognition_spark.operators.dedup import (
         clear_signature_cache,
     )
@@ -64,8 +67,9 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         per.append(dict(name=name, jobs=0, stages=0, tasks=0, run_ms=0,
                         cpu_ms=0, gc_ms=0, shuf_read=0, shuf_write=0,
-                        wall=time.perf_counter() - t0,
-                        compiles=codegen.getCount() - c0))
+                        peak_exec=0, wall=time.perf_counter() - t0,
+                        compiles=codegen.getCount() - c0,
+                        storage=memory.storageMemoryUsed()))
         spark.sparkContext.setJobDescription(None)
     spark.stop()
 
@@ -100,6 +104,8 @@ def main() -> None:
                     p["run_ms"] += m.get("Executor Run Time", 0)
                     p["cpu_ms"] += m.get("Executor CPU Time", 0) // 1_000_000
                     p["gc_ms"] += m.get("JVM GC Time", 0)
+                    p["peak_exec"] = max(p["peak_exec"],
+                                         m.get("Peak Execution Memory", 0))
                     sr = m.get("Shuffle Read Metrics", {})
                     p["shuf_read"] += (sr.get("Remote Bytes Read", 0)
                                        + sr.get("Local Bytes Read", 0))
@@ -111,7 +117,9 @@ def main() -> None:
               f"compiles={p['compiles']} "
               f"run={p['run_ms']/1000:.1f}s cpu={p['cpu_ms']/1000:.1f}s "
               f"gc={p['gc_ms']/1000:.1f}s "
-              f"shufR={p['shuf_read']//1024}K shufW={p['shuf_write']//1024}K",
+              f"shufR={p['shuf_read']//1024}K shufW={p['shuf_write']//1024}K "
+              f"peak_exec_mb={p['peak_exec']/2**20:.1f} "
+              f"storage_mb={p['storage']/2**20:.1f}",
               flush=True)
 
 

@@ -295,3 +295,23 @@ def test_codegen_cache_keeps_the_working_set(spark):
     before = compiles()
     build(7919)
     assert compiles() == before
+
+
+def test_broadcast_relation_does_not_pin_a_heap_sized_page(spark):
+    """Spark sizes its Tungsten page from the heap (32 MB at this
+    session's 8g heap and 8 cores), and a hashed broadcast relation keeps
+    its page in the driver's storage memory until its plan is collected.
+    The session fixes pages at 1 MB. The build side is string-keyed: a
+    long key builds a LongHashedRelation, which holds about 1 MB at any
+    page size."""
+    mm = spark._jvm.org.apache.spark.SparkEnv.get().memoryManager()
+    assert mm.pageSizeBytes() <= 1 << 20
+
+    small = spark.range(10).selectExpr("cast(id AS string) k", "id * 2 v")
+    big = spark.range(1000).selectExpr("cast(id % 10 AS string) k")
+    df = big.join(F.broadcast(small), "k")
+    assert "BroadcastHashJoin" in \
+        df._jdf.queryExecution().executedPlan().toString()
+    before = mm.storageMemoryUsed()
+    df.write.format("noop").mode("overwrite").save()
+    assert mm.storageMemoryUsed() - before < 4 << 20

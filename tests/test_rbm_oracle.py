@@ -204,6 +204,27 @@ def test_dbn_layer_two_matches_numpy_on_layer_one_activations(
     np.testing.assert_allclose(W2, calls[3][0] + calls[3][2], rtol=1e-12)
 
 
+def test_dbn_passes_numcase_to_every_layer(spark, monkeypatch):
+    """The reference driver's numCase (defect D10): every layer of a
+    DBN divides its gradient by the configured count, not by the rows."""
+    from hadoop_digit_recognition_spark.rbm import trainer
+
+    rng = np.random.default_rng(5)
+    V = rng.random((20, 6))
+    df = spark.createDataFrame([(r.tolist(),) for r in V], "v array<double>")
+    calls = []
+    real = trainer.cd1_gradient_collect
+    monkeypatch.setattr(trainer, "cd1_gradient_collect", lambda *a, **k: (
+        calls.append((a[2].copy(), real(*a, **k))) or calls[-1][1]))
+    W1, _ = DBN([6, 4, 3], numcase=137).fit(df, "v").weights
+
+    for X, (W, delta) in zip([V, _sigmoid(V @ W1)], calls):
+        np.testing.assert_allclose(
+            delta, 0.1 * numpy_cd1_meanfield(X, W) / 137, rtol=1e-9,
+            atol=1e-12)
+    assert len(calls) == 2
+
+
 def _plan_nodes(df) -> list[str]:
     """Node names of df's physical plan, cached plans included (an
     InMemoryRelation prints the plan that fills it)."""
